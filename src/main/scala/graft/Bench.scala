@@ -28,18 +28,14 @@ object Bench {
     // cost on a row of its own: the family ledger reads
     // pq_stage (train+encode+checkpoint+cells, the index build) +
     // pq_train (the memo-free training benchmark row) + searches.
-    // a FAILED staging reports its elapsed time NEGATED: a plausible
-    // positive number here with an unpopulated memo would silently
-    // push the build cost back inside the first consumer's timed
-    // iteration — the exact misattribution these rows exist to fix —
-    // so the artifact must show the failure, not just stderr
-    def timed(body: => Unit): Double = {
+    // a FAILED staging row has no time (see the failure rule below): a
+    // plausible number with an unpopulated memo would silently push the
+    // build cost back inside the first consumer's timed iteration — the
+    // exact misattribution these rows exist to fix
+    def timed(body: => Unit): scala.util.Try[Double] = scala.util.Try {
       val t0 = System.nanoTime()
-      val ok = try { body; true } catch { case e: Throwable =>
-        System.err.println(s"[bench] staging failed: ${e.getMessage}")
-        false }
-      val sec = (System.nanoTime() - t0) / 1e9
-      if (ok) sec else -sec
+      body
+      (System.nanoTime() - t0) / 1e9
     }
     // order matters: stagedOpq composes PcaStage.fitted, so the PCA fit
     // is staged (and charged) first — pq_stage then carries only the
@@ -59,8 +55,10 @@ object Bench {
       // fertility rows consume (bpe_train itself stays memo-free —
       // it IS the training benchmark row, like pq_train)
       "bpe_stage" -> timed {
-        queries.BpeStage.staged(spark, sfDir); () }).toMap
-    val results = stagingRows ++ SparkEntry.queries.toSeq.sortBy(_._1).map {
+        queries.BpeStage.staged(spark, sfDir); () })
+    // A row that throws has no time: it is listed under "failed", left
+    // out of "queries" and the total, and the run exits non-zero.
+    val timedQueries = SparkEntry.queries.toSeq.sortBy(_._1).map {
       case (name, fn) =>
         // two iterations, report the SECOND: the first run pays Janino
         // codegen compilation and JIT warm-up, which made round-over-round
@@ -70,14 +68,18 @@ object Bench {
           val t0 = System.nanoTime()
           // noop sink: materializes every output column (count() would
           // let the optimizer prune the aggregates away)
-          try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}") }
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           (System.nanoTime() - t0) / 1e9
         }
-        once()
-        name -> once()
-    }.toMap
+        name -> scala.util.Try { once(); once() }
+    }
+    val rows = stagingRows ++ timedQueries
+    val failed = rows.collect { case (name, scala.util.Failure(e)) =>
+      System.err.println(s"[bench] $name failed: ${e.getMessage}")
+      name
+    }
+    val results = rows.collect {
+      case (name, scala.util.Success(sec)) => name -> sec }.toMap
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
@@ -134,7 +136,8 @@ object Bench {
     val memGBps =
       12.0 * 64 * 1024 * 1024 * spark.sparkContext.defaultParallelism /
         calMem / 1e9
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"calibration_sec":$calibration,"calibration_mem_sec":$calMem,"calibration_mem_gbps":$memGBps,"total_over_calibration":${total / calibration},"sf":"$sfDir"}"""
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"calibration_sec":$calibration,"calibration_mem_sec":$calMem,"calibration_mem_gbps":$memGBps,"total_over_calibration":${total / calibration},"sf":"$sfDir"}"""
     println(json)
     // the driver's artifact pipeline head-truncates long stdout lines
     // (BENCH_r08.json lost ~14 of 77 query timings), so the full
@@ -145,5 +148,10 @@ object Bench {
       java.nio.file.Files.writeString(java.nio.file.Paths.get(p), json)
     }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} rows failed: " +
+        failed.mkString(", "))
+      sys.exit(1)
+    }
   }
 }

@@ -18,9 +18,11 @@ import org.apache.spark.sql.DataFrame
   * a parallel driver thread's checkpoint landing between the two
   * snapshots would be captured in this caller's id set and released
   * out from under it (a localCheckpoint'd RDD cannot recompute dropped
-  * blocks). True for this engine's single-threaded driver paths
-  * (Verify, Bench, the batch pipeline); do not call the ckpt/release
-  * pair from parallel driver threads. */
+  * blocks). So: bodies run concurrently by [[Overlap.par]] may PIN
+  * (their returned id sets may then include a sibling's pins) but must
+  * never call [[release]]; whatever they pinned is released by the
+  * caller once `par` has returned, i.e. after every body finished (the
+  * streaming batch's release-everything-new `finally`). */
 object Pins {
 
   /** Eagerly localCheckpoint `df`, returning the pinned frame and the

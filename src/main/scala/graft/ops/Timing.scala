@@ -10,16 +10,24 @@ import org.apache.spark.sql.functions._
   * Spark-native shape: stages append (dataset, stage, seconds) rows to a
   * `timing` parquet table as they run; the summary is a groupBy — so the
   * stats survive restarts and scale to any number of batches, instead of
-  * living in driver memory. */
+  * living in driver memory.
+  *
+  * Stage times may OVERLAP within a batch: the streaming driver runs
+  * its output pins and sinks from concurrent driver threads
+  * ([[graft.core.Overlap]]), so each stage's seconds are its own wall
+  * time and a batch's stage times can sum to more than the batch took.
+  * The buffer is therefore a concurrent queue. */
 object Timing {
 
+  /** One batch's (stage, seconds) rows; safe to append from several
+    * driver threads. */
+  type Buffer = java.util.concurrent.ConcurrentLinkedQueue[(String, Double)]
+
   /** Time a stage, recording into `buf`. */
-  def timed[T](stage: String,
-               buf: scala.collection.mutable.ArrayBuffer[(String, Double)])
-              (f: => T): T = {
+  def timed[T](stage: String, buf: Buffer)(f: => T): T = {
     val t0 = System.nanoTime()
     val r = f
-    buf += stage -> ((System.nanoTime() - t0) / 1e9)
+    buf.add(stage -> ((System.nanoTime() - t0) / 1e9))
     r
   }
 

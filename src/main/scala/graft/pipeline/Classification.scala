@@ -96,22 +96,27 @@ object Classification {
     * (the common frame), the whole wedge stage — azimuthal-gradient CCL
     * included — is skipped outright.
     *
-    * `labeledSmall = true` (both classify paths) asserts `labeled` is
-    * already pinned or built narrowly on a pinned table, skipping the
-    * redundant re-pin; the broadcast size gate runs either way.
+    * `labeledRows = Some(n)` (both classify paths) asserts `labeled` is
+    * built narrowly on a pinned table and has `n` rows — the caller read
+    * the count off that pin's own materializing action — so the
+    * redundant re-pin AND its count are skipped; the broadcast size gate
+    * runs either way. Without it `labeled` is pinned here and the count
+    * is that pin's action. Both are by-name and evaluated once, on the
+    * driver thread that builds the labeled side (see the overlap below),
+    * so a caller may hand in its cluster labeling still unevaluated.
     *
     * `labeled` must carry ONE classifier value per (keys, label) — the
     * shape [[shapeClassify]] produces (its output is per-label and
     * joined back on the label key). The wedge-stage routing reads
     * classifier evidence off the central-band rows, which is equivalent
     * to the any-pixel test exactly under that invariant. */
-  def gradientRefine(allPx: DataFrame, labeled: DataFrame, width: Int,
+  def gradientRefine(allPx: DataFrame, labeled: => DataFrame, width: Int,
                      height: Int, keys: Seq[String],
                      p: Params = Params(),
                      d2Precomputed: Option[DataFrame] = None,
-                     labeledSmall: Boolean = false): DataFrame = {
+                     labeledRows: => Option[Long] = None): DataFrame = {
     val kcols = keys.map(col)
-    val spark = labeled.sparkSession
+    val spark = allPx.sparkSession
 
     // collect-route: pin a tiny per-cluster table as a LocalRelation so
     // downstream broadcasts are free of lineage re-execution; the rows
@@ -136,25 +141,37 @@ object Classification {
 
     // ---- A5: per-cluster central-band percentile vs global threshold --
     // d2 is the full frame; the labeled cluster side broadcasts so the
-    // frame never shuffles. labeledSmall skips the REDUNDANT re-pin (the
-    // classify attach path hands in a table built on its own checkpoint)
-    // but NOT the size gate: a pathological dense mask (a threshold
+    // frame never shuffles. labeledRows skips the REDUNDANT re-pin (the
+    // classify paths hand in a table built on their own checkpoint) but
+    // NOT the size gate: a pathological dense mask (a threshold
     // selecting half the frame) makes the closed-cluster table
     // frame-sized, and a blind broadcast there would OOM the driver
     // where the gated form degrades to a shuffle join.
-    val labeledPinned =
-      if (labeledSmall) labeled else labeled.localCheckpoint(true)
-    val labHint = if (labeledPinned.count() <= 1000000L)
-      broadcast(labeledPinned) else labeledPinned
-    val withG = d2.join(labHint, keys :+ "y" :+ "x").localCheckpoint(true)
+    lazy val withG = {
+      val (labeledPinned, labeledN) = labeledRows match {
+        case Some(n) => (labeled, n)
+        case None =>
+          val (pinned, _, n) = graft.core.Pins.ckptWith(labeled)(_.count())
+          (pinned, n)
+      }
+      val labHint = if (labeledN <= 1000000L)
+        broadcast(labeledPinned) else labeledPinned
+      d2.join(labHint, keys :+ "y" :+ "x").localCheckpoint(true)
+    }
     // distributed rank-selection percentile: the gather-and-sort
     // aggregator ran its final sort in ONE task per frame — the measured
     // hot critical-path stage at production frame size (SCALE_r06.md);
     // this form keeps every stage at data-partition parallelism.
     // Collect-routed: ≤ 1 row per frame.
-    val globalThresh = localized(graft.ops.PercentileAgg.percentileSelect(
-      d2.select(kcols :+ col("grad2_r"): _*), keys, "grad2_r",
-      p.globalPercentile, outCol = "g_thresh"))
+    lazy val globalThresh = localized(
+      graft.ops.PercentileAgg.percentileSelect(
+        d2.select(kcols :+ col("grad2_r"): _*), keys, "grad2_r",
+        p.globalPercentile, outCol = "g_thresh"))
+    // the threshold reads only d2; the labeled side (with `classify`'s
+    // closing, CCL and pin, which `labeled` and `labeledRows` evaluate
+    // lazily) is independent of it: materialize both together from
+    // driver threads, so neither chain of actions waits on the other
+    graft.core.Overlap.par(() => withG, () => globalThresh)
     val central = withG.where(
       abs(col("q") - col("median_q")) < p.centralBandQ)
     // _arc2 rides along purely to route the wedge stage below: it marks
@@ -306,8 +323,7 @@ object Classification {
     // fused closing + CCL: one shuffle serves both (CCL.closeAndLabel);
     // density-gated so a pathological mask (e.g. threshold selecting half
     // the frame) still escalates to relational closing + tile-local CCL
-    val labeled0 = CCL.closeAndLabel(outlierPx, 1, width, height, keys)
-      .localCheckpoint(true)
+    lazy val closed = CCL.closeAndLabel(outlierPx, 1, width, height, keys)
     // closing can add pixels outside the original outlier set; the
     // cluster stats need q/azim/azim_flipped for every CLOSED pixel.
     // With a calibration in hand those are a closed-form function of
@@ -316,29 +332,36 @@ object Classification {
     // frame bounds so membership matches the join), computed directly
     // on the TINY cluster table; the join form re-scanned the 33M-row
     // frame to decorate ~1e3 rows (~4 s/batch warm, WarmProbe) and is
-    // kept for callers without a calibration.
-    val labeled = (cal match {
+    // kept for callers without a calibration. Either way the decorated
+    // table is pinned (reused by shape stats + refinement) and its row
+    // count — the refinement's broadcast gate — is the pin's action.
+    lazy val (labeled, _, labeledN) = graft.core.Pins.ckptWith(cal match {
       case Some(c) =>
-        graft.geometry.Geometry.attach(labeled0, c)
+        graft.geometry.Geometry.attach(closed, c)
           .select(keys.map(col) ++ Seq(col("y"), col("x"), col("q"),
             col("azim"), col("azim_flipped"), col("label")): _*)
       case None =>
         // count-gated broadcast: the full frame table never shuffles
-        val lab0 = if (labeled0.count() <= 1000000L) broadcast(labeled0)
-                   else labeled0
+        val (labeled0, _, n0) =
+          graft.core.Pins.ckptWith(closed)(_.count())
+        val lab0 = if (n0 <= 1000000L) broadcast(labeled0) else labeled0
         framePx.select(keys.map(col) ++
             Seq(col("y"), col("x"), col("q"), col("azim"),
               col("azim_flipped")): _*)
           .join(lab0, keys :+ "y" :+ "x")
-    }).localCheckpoint(true) // reused by shape stats + refinement
-    val shaped = shapeClassify(labeled, keys, p)
-    val labeledFull = labeled.join(broadcast(shaped), keys :+ "label")
+    })(_.count())
+    // one shape row per (keys, label) of `labeled`: the inner join keeps
+    // every labeled row, so labeledFull has exactly labeledN rows
+    lazy val labeledFull = labeled.join(
+      broadcast(shapeClassify(labeled, keys, p)), keys :+ "label")
     // BOTH branches pin `labeled` above, so labeledFull recomputes as a
     // narrow broadcast-join over a checkpointed table in either path —
-    // gradientRefine skips its redundant re-checkpoint (one scheduler
-    // round-trip per batch); the broadcast size gate still runs — see
-    // gradientRefine's doc
+    // gradientRefine skips its redundant re-checkpoint and count (one
+    // scheduler round-trip per batch, and a second run of the shape
+    // join); the broadcast size gate still runs — see gradientRefine's
+    // doc. Everything from the closing on is lazy: gradientRefine runs
+    // it alongside its global-threshold percentile.
     gradientRefine(framePx, labeledFull, width, height, keys, p,
-      d2Precomputed, labeledSmall = true)
+      d2Precomputed, labeledRows = Some(labeledN))
   }
 }

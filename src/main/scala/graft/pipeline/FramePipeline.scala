@@ -152,19 +152,20 @@ object FramePipeline {
       .withColumn("base_mask", baseMask(col("corr_i"), predef))
     val live = px.where(!col("base_mask"))
     // one-pass custom aggregator: ring stats in a single shuffle
-    // (ring populations are bounded, SURVEY §2.12 item 3). Materialized
-    // so the row count can gate the join strategy below without
-    // recomputing the aggregate.
-    val ringStats = RobustStats.medianMadOnePass(
-      live.select(col("frame_no"), col("tth_bin"),
-        col("corr_i").as("ival")),
-      Seq("frame_no", "tth_bin"), "ival").localCheckpoint(true)
+    // (ring populations are bounded, SURVEY §2.12 item 3). Pinned so the
+    // join below does not recompute the aggregate; the row count that
+    // gates the join strategy is the pin's own materializing action.
+    val (ringStats, _, ringRows) = graft.core.Pins.ckptWith(
+      RobustStats.medianMadOnePass(
+        live.select(col("frame_no"), col("tth_bin"),
+          col("corr_i").as("ival")),
+        Seq("frame_no", "tth_bin"), "ival"))(_.count())
     // Broadcast growth guard: ring-stat rows scale as frames x rings, so
     // a 10k-frame backfill batch would broadcast tens of millions of
     // rows and OOM the driver. Below the threshold the broadcast keeps
     // the fact side shuffle-free (the hot path for live batches); above
     // it the join falls back to a hash-partitioned shuffle.
-    val stats = if (ringStats.count() <= maxBroadcastStatsRows)
+    val stats = if (ringRows <= maxBroadcastStatsRows)
       broadcast(ringStats) else ringStats
     px.join(stats, Seq("frame_no", "tth_bin"), "left")
       .withColumn("is_outlier", coalesce(
@@ -282,14 +283,15 @@ object FramePipeline {
     // the narrow checkpoint (it needs q/azim/azim_flipped, all there);
     // passing cal lets it derive cluster geometry closed-form instead of
     // re-scanning that checkpoint for the label join.
-    val flags = Classification.classify(narrow, w, h, keys, params,
-        d2Precomputed = Some(gradBoth), cal = Some(cal))
-      .localCheckpoint(true)
+    val (flags, _, flagRows) = graft.core.Pins.ckptWith(
+      Classification.classify(narrow, w, h, keys, params,
+        d2Precomputed = Some(gradBoth), cal = Some(cal)))(_.count())
     // flag rows are outlier-cluster pixels — orders of magnitude smaller
     // than the frame. Without the hint Catalyst plans a sort-merge that
     // shuffles the 33M-row fact side; count-gate it like flagOutliers so
-    // a pathological dense mask still degrades gracefully.
-    val flagsSmall = flags.count() <= 1000000L
+    // a pathological dense mask still degrades gracefully (the count is
+    // the pin's materializing action).
+    val flagsSmall = flagRows <= 1000000L
     val flagsSel = flags.select(col("frame_no"), col("y"), col("x"),
       col("label"), col("is_spot"), col("is_arc"))
     val px = narrow.join(

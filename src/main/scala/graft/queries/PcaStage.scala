@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.SparkSession
 
+import graft.core.Overlap
 import graft.ops.Pca
 
 /** One session-scoped memo: value computed once per (session, dir).
@@ -47,32 +48,6 @@ private[queries] final class SessionMemo[A](maxEntries: Int = 8) {
         v
       }
     }
-}
-
-/** Driver-thread overlap for INDEPENDENT staged builds (guide §2.6:
-  * actions are only sequential because the driver calls them
-  * sequentially; jobs submitted from separate threads back-fill idle
-  * cores under each other's scheduling gaps and single-partition
-  * materializations — and their Janino codegen compiles overlap too,
-  * which is most of a cold staging row). Only compose builds with NO
-  * data dependency; a shared sub-build reached from two branches is
-  * safe because every staged artifact sits behind a [[SessionMemo]]
-  * whose per-memo lock serializes the compute (second caller blocks,
-  * then reads the memo hit). Failures propagate with the original
-  * exception; remaining branches drain in the background (Spark
-  * actions are not interruptible mid-job). */
-private[queries] object Overlap {
-  def par(bodies: (() => Unit)*): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(bodies.size)
-    try bodies.map(b => pool.submit(new java.util.concurrent.Callable[Unit] {
-      def call(): Unit = b()
-    })).foreach { f =>
-      try f.get()
-      catch { case e: java.util.concurrent.ExecutionException =>
-        throw e.getCause }
-    }
-    finally pool.shutdown()
-  }
 }
 
 /** Staged PCA artifacts, computed once per (session, sf-dir) — the

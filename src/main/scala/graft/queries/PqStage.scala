@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Overlap
 import graft.ops.Pq
 
 /** Staged PQ artifacts for the search queries — the separation a real

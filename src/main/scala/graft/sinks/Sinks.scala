@@ -55,37 +55,48 @@ object Sinks extends Serializable {
     * reference's NFS posture), `hdfs://` or `s3a://` alike. */
   def writeChi(integrals: DataFrame, outDir: String, variant: String,
                dense: Option[(Int, Double, Double)] = None,
-               dataset: String = "frame"): Unit = {
+               dataset: String = "frame"): Unit =
+    writeChiAll(integrals, outDir, Seq(variant), dense, dataset)
+
+  /** [[writeChi]] for several variants in ONE pass: one exchange and one
+    * sort of the integral table write every variant's file of a frame
+    * from the same rows (the streaming batch writes all four). */
+  def writeChiAll(integrals: DataFrame, outDir: String, variants: Seq[String],
+                  dense: Option[(Int, Double, Double)] = None,
+                  dataset: String = "frame"): Unit = {
     import graft.core.Fs
     Fs.mkdirs(outDir, Fs.conf(integrals.sparkSession))
     val hc = Fs.onExecutors(integrals.sparkSession)
-    val dir = outDir; val vName = variant; val denseOpt = dense
+    val dir = outDir; val vNames = variants.toArray; val denseOpt = dense
     val ds = dataset
+    val iCols = variants.map(v => s"i_$v")
     integrals
-      .select(col("frame_no").cast("int"), col("tth_bin"), col("tth"),
-        col(s"i_$vName"))
-      .na.fill(0.0, Seq(s"i_$vName"))
+      .select(Seq(col("frame_no").cast("int"), col("tth_bin"), col("tth")) ++
+        iCols.map(col): _*)
+      .na.fill(0.0, iCols)
       .repartition(col("frame_no"))
       .sortWithinPartitions(col("frame_no"), col("tth_bin"))
       .foreachPartition { (it: Iterator[Row]) =>
         val buf = scala.collection.mutable.ArrayBuffer
-          .empty[(Int, Double, Double)] // (bin, tth, intensity)
+          .empty[(Int, Double, Array[Double])] // (bin, tth, intensities)
         var cur = Int.MinValue
-        def flush(): Unit = if (cur != Int.MinValue) {
-          val series = denseOpt match {
-            case Some((n, lo, step)) =>
-              val present = buf.iterator.map(t => t._1 -> t._3).toMap
-              (0 until n).map(b => (lo + (b + 0.5) * step,
-                present.getOrElse(b, 0.0)))
-            case None => buf.toSeq.map(t => (t._2, t._3))
+        def flush(): Unit = if (cur != Int.MinValue)
+          vNames.indices.foreach { v =>
+            val series = denseOpt match {
+              case Some((n, lo, step)) =>
+                val present = buf.iterator.map(t => t._1 -> t._3(v)).toMap
+                (0 until n).map(b => (lo + (b + 0.5) * step,
+                  present.getOrElse(b, 0.0)))
+              case None => buf.toSeq.map(t => (t._2, t._3(v)))
+            }
+            graft.core.Fs.writeString(f"$dir/$ds-$cur%05d_${vNames(v)}.chi",
+              chiBody(f"$ds-$cur%05d.tif", series), hc.value)
           }
-          graft.core.Fs.writeString(f"$dir/$ds-$cur%05d_$vName.chi",
-            chiBody(f"$ds-$cur%05d.tif", series), hc.value)
-        }
         it.foreach { r =>
           val f = r.getInt(0)
           if (f != cur) { flush(); cur = f; buf.clear() }
-          buf += ((r.getInt(1), r.getDouble(2), r.getDouble(3)))
+          buf += ((r.getInt(1), r.getDouble(2),
+            Array.tabulate(vNames.length)(v => r.getDouble(3 + v))))
         }
         flush()
       }

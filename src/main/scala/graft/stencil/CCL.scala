@@ -97,10 +97,10 @@ object CCL {
     val spark = active.sparkSession
     import spark.implicits._
     require(keys.size <= 1, "CCL supports at most one numeric frame key")
-    val pinned = active.localCheckpoint(true)
     val fkey0 = keys.headOption.map(col).getOrElse(lit(0))
-    val maxRow = pinned.groupBy(fkey0.as("_f")).count()
-      .agg(max(col("count"))).head()
+    // the busiest-frame count is the pin's own materializing action
+    val (pinned, _, maxRow) = graft.core.Pins.ckptWith(active)(
+      _.groupBy(fkey0.as("_f")).count().agg(max(col("count"))).head())
     val maxPerFrame = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
     if (maxPerFrame > densePixelsPerFrame) {
       // r == 0: `pinned` is already materialized — tell labelDense not to

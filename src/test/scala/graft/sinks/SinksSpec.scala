@@ -33,6 +33,26 @@ class SinksSpec extends SparkSpec {
     assert(vals == Seq(10.0, 0.0, 30.0, 0.0))
   }
 
+  test("writeChiAll: one pass writes every variant's file of every frame") {
+    import spark.implicits._
+    val integ = Seq[(Int, Int, Double, Option[Double], Option[Double])](
+        (1, 0, 1.05, Some(10.0), Some(9.0)), (1, 2, 1.25, Some(30.0), None),
+        (2, 1, 1.15, Some(20.0), Some(19.0)))
+      .toDF("frame_no", "tth_bin", "tth", "i_base", "i_om")
+    val dir = java.nio.file.Files.createTempDirectory("graft_chiall").toString
+    Sinks.writeChiAll(integ, dir, Seq("base", "om"),
+      dense = Some((3, 1.0, 0.1)), dataset = "MA2")
+    def expect(f: Int, vals: Seq[Double]) = Sinks.chiBody(
+      f"MA2-$f%05d.tif", vals.zipWithIndex.map { case (v, b) =>
+        (1.0 + (b + 0.5) * 0.1, v) })
+    def read(f: Int, v: String) = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(f"$dir/MA2-$f%05d_$v.chi"))
+    assert(read(1, "base") == expect(1, Seq(10.0, 0.0, 30.0)))
+    assert(read(1, "om") == expect(1, Seq(9.0, 0.0, 0.0))) // null -> 0
+    assert(read(2, "base") == expect(2, Seq(0.0, 20.0, 0.0)))
+    assert(read(2, "om") == expect(2, Seq(0.0, 19.0, 0.0)))
+  }
+
   test("writeCsv emits headered csv readable back with the same rows") {
     import spark.implicits._
     val df = Seq((1, "a", 1.5), (2, "b", 2.5)).toDF("id", "s", "v")
@@ -207,5 +227,26 @@ class TimingSpec extends graft.SparkSpec {
         r.getDouble(3))).toMap
     assert(s("decode") == ((2L, 2.0, 1.0)))  // mean 2, std_pop 1
     assert(s("process") == ((2L, 3.0, 0.0)))
+  }
+
+  test("A14 stages timed from concurrent driver threads all reach the " +
+      "timing table under their names") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_tm2").toString
+    // the streaming batch's overlapped pin and sink stages
+    val stages = Seq("process", "stats", "sink_integrals", "sink_chi",
+      "sink_masks", "sink_stats_tables", "sink_stats_csv", "spottiness",
+      "csim")
+    val reps = 200
+    val buf = new graft.ops.Timing.Buffer()
+    val start = new java.util.concurrent.CountDownLatch(stages.size)
+    graft.core.Overlap.par(stages.map(st => () => {
+      start.countDown(); start.await()
+      (1 to reps).foreach(_ => graft.ops.Timing.timed(st, buf)(()))
+    }): _*)
+    import scala.jdk.CollectionConverters._
+    graft.ops.Timing.write(spark, dir, "ds1", buf.asScala.toSeq)
+    val n = graft.ops.Timing.summary(spark, dir).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(n == stages.map(_ -> reps.toLong).toMap)
   }
 }

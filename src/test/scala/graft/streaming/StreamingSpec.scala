@@ -71,6 +71,16 @@ class FrameSourceSpec extends SparkSpec {
 
 class StreamingPipelineSpec extends SparkSpec {
 
+  /** Spark jobs measured per micro-batch of the job-budget test (two
+    * frames of 96² each; the first batch also writes the geometry maps).
+    * The chain of one action after another ran 105 and 109. */
+  private val MeasuredJobs = Map(0 -> 67, 1 -> 64)
+
+  /** Slack, in jobs, on each batch and on the two-batch total. A probe
+    * re-added to the batch costs at least one job in EACH batch, so it
+    * overruns the total. */
+  private val JobSlack = 1
+
   /** Write `n` synthetic frames as TIFF files into a fresh temp dir. */
   private def writeFrames(cal: graft.core.Calibration, dir: String,
                           nums: Range): Unit =
@@ -118,6 +128,67 @@ class StreamingPipelineSpec extends SparkSpec {
     // crosses the batch boundary without defaulting to the 1.0 edge rule
     assert(split(3)._1 < 1.0 - 1e-12)
     assert(split(3)._2 < 1.0 - 1e-12)
+  }
+
+  test("job budget: each frames micro-batch runs its measured Spark " +
+      "jobs plus a one-job slack; its overlapped stages all reach the " +
+      "A14 timing table") {
+    // A deterministic counter, not a wall time: every driver read or
+    // checkpoint added to the batch's chain shows up here as jobs. The
+    // count is per (query id, batch id) — the local properties every job
+    // of a micro-batch carries, including jobs submitted from the
+    // batch's own driver threads.
+    val cal = SyntheticFrame.testCalibration(96)
+    val geo = Geometry.build(spark, cal).localCheckpoint(true)
+    val tmpIn = java.nio.file.Files.createTempDirectory("graft_injb").toString
+    val out = java.nio.file.Files.createTempDirectory("graft_outjb").toString
+    writeFrames(cal, tmpIn, 1 to 4)
+    val jobs = new java.util.concurrent.ConcurrentHashMap[(String, String), Int]()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          if (p.getProperty("graft.jobBudget.marker") != null) marker.countDown()
+          val q = p.getProperty("sql.streaming.queryId")
+          val b = p.getProperty("streaming.sql.batchId")
+          if (q != null && b != null) jobs.merge((q, b), 1, _ + _)
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val q = StreamingPipeline.start(spark, tmpIn, out, cal, geo,
+        availableNow = true, maxFilesPerTrigger = 2) // 2 batches x 2 frames
+      q.awaitTermination(300000)
+      // listener events arrive in order: once this marker job is seen,
+      // every stream job has been counted
+      spark.sparkContext.setLocalProperty("graft.jobBudget.marker", "1")
+      try spark.sparkContext.parallelize(1 to 1, 1).count()
+      finally spark.sparkContext.setLocalProperty("graft.jobBudget.marker", null)
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      import scala.jdk.CollectionConverters._
+      val perBatch = jobs.asScala.collect {
+        case ((qid, b), n) if qid == q.id.toString => b.toInt -> n }.toMap
+      assert(perBatch.keySet == Set(0, 1), s"batches: $perBatch")
+      info(s"jobs per micro-batch: $perBatch")
+      perBatch.foreach { case (b, n) =>
+        assert(n <= MeasuredJobs(b) + JobSlack,
+          s"batch $b ran $n jobs, measured ${MeasuredJobs(b)}: $perBatch") }
+      assert(perBatch.values.sum <= MeasuredJobs.values.sum + JobSlack,
+        s"the two batches ran ${perBatch.values.sum} jobs, measured " +
+          s"${MeasuredJobs.values.sum}: $perBatch")
+      // each batch's stages, timed from overlapping driver threads, are
+      // all in the timing table under their A14 names
+      val stages = Seq("decode", "frame_plan", "process", "stats",
+        "sink_integrals", "sink_chi", "sink_masks", "sink_stats_tables",
+        "sink_stats_csv", "spottiness", "csim")
+      val timing = spark.read.parquet(s"$out/tables/timing")
+        .groupBy(col("stage")).count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      stages.foreach(st => assert(timing.get(st).contains(2L),
+        s"stage $st: ${timing.get(st)} rows, want one per batch"))
+      assert(timing.get("sink_maps_cache").contains(1L))
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("a micro-batch unpersists every RDD it pinned (bounded executor " +
