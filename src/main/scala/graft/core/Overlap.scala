@@ -22,11 +22,11 @@ import java.util.concurrent.{Callable, ExecutionException, Executors, Future}
   * Failure: EVERY body runs to completion before `par` returns or
   * throws; the first failure (in argument order) is then rethrown with
   * its original exception, later ones attached as suppressed. A caller's
-  * `finally` (e.g. releasing the batch's pins) therefore never runs
-  * under a body that is still reading what it releases. That holds when
-  * the calling thread is interrupted too (a streaming query stopped
-  * mid-batch): `par` still waits, then restores the interrupt flag.
-  * Bodies must not release pins themselves — see [[Pins]]. */
+  * [[Pins.scope]] therefore never exits (releasing its pins) under a
+  * body that is still reading them. That holds when the calling thread
+  * is interrupted too (a streaming query stopped mid-batch): `par`
+  * still waits, then restores the interrupt flag. Bodies pin into the
+  * caller's scope: they inherit it as they inherit the properties. */
 object Overlap {
 
   def par(bodies: (() => Unit)*): Unit = {

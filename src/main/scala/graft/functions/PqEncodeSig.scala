@@ -28,7 +28,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * CodegenFallback: the per-row work is a fixed S×k×(D/S) arithmetic
   * loop; falling back costs the enclosing projection its whole-stage
   * fusion but removes a corpus exchange, which dominates at any scale
-  * (the MinhashSig family precedent, measured in TextHotBench).
+  * (the MinhashSig family precedent, measured per token in SCALE_r08).
   */
 case class PqEncodeSig(child: Expression,
                        codebook: IndexedSeq[IndexedSeq[IndexedSeq[Double]]])

@@ -10,7 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Repetition-quality features as ONE row-local expression — the scale
   * path for the Gopher/C4 repetition filters, promoted from the
   * interpreted higher-order-function form on round-8 measurements
-  * (TextHotBench: the HOF form costs 740–1113 ns/token — 16× the
+  * (SCALE_r08: the HOF form costs 740–1113 ns/token — 16× the
   * CodegenFallback fingerprint family at ~60–70 ns/token — and was the
   * hottest text operator by far; this expression replaces the per-row
   * array sort + three array_distinct passes with one hash-counting

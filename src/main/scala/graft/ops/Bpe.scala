@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Pins
+
 /** Distributed byte-pair-encoding tokenizer TRAINING (Sennrich et al.
   * 2016, arXiv:1508.07909 — the subword-nmt recipe): learn a merge
   * table by repeatedly counting adjacent symbol pairs over the corpus
@@ -129,17 +131,6 @@ object Bpe {
       })
   }
 
-  /** Diff-and-release checkpoint hygiene — [[graft.core.Pins]], the
-    * shared idiom (single-threaded-driver contract documented there):
-    * a tight hundreds-of-merges loop would otherwise accumulate
-    * superseded vocabulary-sized tables in executor storage; tracking
-    * and releasing bounds it at two. */
-  private def ckpt(df: DataFrame): (DataFrame, Set[Int]) =
-    graft.core.Pins.ckpt(df)
-
-  private def release(df: DataFrame, ids: Set[Int]): Unit =
-    graft.core.Pins.release(df.sparkSession.sparkContext, ids)
-
   /** The per-round adjacent-pair count table over a word table —
     * (l, r, cnt), pair-vocabulary-sized, all-integer. */
   private def pairCounts(words: DataFrame): DataFrame =
@@ -170,13 +161,15 @@ object Bpe {
     require(merges > 0, s"need merges > 0, got $merges")
     // each iteration's input is pinned: the pair count and the rewrite
     // both read it, and unpinned the whole lineage (corpus scan
-    // included) would re-execute once per iteration
-    var (words, pins) = ckpt(wordTable(df, textCol))
+    // included) would re-execute once per iteration. Each superseded
+    // pin is released at once: a tight hundreds-of-merges loop would
+    // otherwise accumulate vocabulary-sized tables in executor storage
+    var words = Pins.pin(wordTable(df, textCol))
     val out = scala.collection.mutable.ArrayBuffer.empty[Merge]
     // NOTE (measured, 2026-08-19): folding each round's checkpoint
     // materialization into the NEXT round's argmax action (lazy ckpt +
-    // the pair aggregation as the materializing job — the ckptCount/
-    // ckptWith lever) was tried and REVERTED: despite 30 -> 24
+    // the pair aggregation as the materializing job — the
+    // Pins.pinWith lever) was tried and REVERTED: despite 30 -> 24
     // scheduler actions it measured consistently SLOWER on the 8-merge
     // row (interleaved worktree pairs, warm mins: 1.25/1.36/1.54 old
     // vs 1.44/1.50/1.74 new, still slower after exempting the final
@@ -196,10 +189,10 @@ object Bpe {
         val (l, r, cnt) =
           (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
         out += Merge(step, l, r, cnt)
-        val (next, nextPins) = ckpt(
+        val next = Pins.pin(
           words.withColumn("syms", applyMerge(col("syms"), l, r)))
-        release(words, pins)
-        words = next; pins = nextPins
+        Pins.release(words)
+        words = next
         step += 1
       }
     }
@@ -260,7 +253,7 @@ object Bpe {
       tryPick(row.getString(0), row.getString(1), row.getLong(2)))
     // prefix shorter than the cap == the whole table was walked
     if (out.size < n && prefix.length == prefixCap) {
-      val (pinned, pins) = ckpt(pc)
+      val pinned = Pins.pin(pc)
       try {
         var mayHaveMore = true
         while (out.size < n && mayHaveMore) {
@@ -274,7 +267,7 @@ object Bpe {
           else tryPick(next(0).getString(0), next(0).getString(1),
             next(0).getLong(2))
         }
-      } finally release(pinned, pins)
+      } finally Pins.release(pinned)
     }
     out.toSeq
   }
@@ -307,7 +300,7 @@ object Bpe {
                    batchN: Int): (Seq[BatchedMerge], DataFrame) = {
     require(merges > 0, s"need merges > 0, got $merges")
     require(batchN > 0, s"need batchN > 0, got $batchN")
-    var (words, pins) = ckpt(wordTable(df, textCol))
+    var words = Pins.pin(wordTable(df, textCol))
     val out = scala.collection.mutable.ArrayBuffer.empty[BatchedMerge]
     var round = 1
     var exhausted = false
@@ -325,10 +318,10 @@ object Bpe {
         picks.zipWithIndex.foreach { case ((l, r, cnt), i) =>
           out += BatchedMerge(base + i + 1, round, l, r, cnt)
         }
-        val (next, nextPins) = ckpt(words.withColumn("syms",
+        val next = Pins.pin(words.withColumn("syms",
           applyMerges(col("syms"), picks.map(p => (p._1, p._2)))))
-        release(words, pins)
-        words = next; pins = nextPins
+        Pins.release(words)
+        words = next
         round += 1
       }
     }
@@ -373,16 +366,13 @@ object Bpe {
       s"need checkpointEvery > 0, got $checkpointEvery")
     val rounds = merges.groupBy(_.round_no).toSeq.sortBy(_._1)
       .map(_._2.sortBy(_.step).map(m => (m.lhs, m.rhs)))
-    var pins = Set.empty[Int]
     val enc = rounds.grouped(checkpointEvery).foldLeft(words) {
       (d, grp) =>
-        val staged = d.withColumn("syms",
-          grp.foldLeft(col("syms"))((c, ps) => applyMerges(c, ps)))
-        val (next, nextPins) = ckpt(staged)
+        val next = Pins.pin(d.withColumn("syms",
+          grp.foldLeft(col("syms"))((c, ps) => applyMerges(c, ps))))
         // release only OUR superseded checkpoints — the caller owns
         // the input table's pins
-        release(d, pins)
-        pins = nextPins
+        if (d ne words) Pins.release(d)
         next
     }
     enc.withColumn("n_sub", size(col("syms")))
@@ -424,17 +414,13 @@ object Bpe {
                   checkpointEvery: Int = 32): DataFrame = {
     require(checkpointEvery > 0,
       s"need checkpointEvery > 0, got $checkpointEvery")
-    var pins = Set.empty[Int]
     val enc = merges.sortBy(_.step).grouped(checkpointEvery)
       .foldLeft(words) { (d, grp) =>
-        val staged = d.withColumn("syms", grp.foldLeft(col("syms")) {
-          (c, m) => applyMerge(c, m.lhs, m.rhs)
-        })
-        val (next, nextPins) = ckpt(staged)
+        val next = Pins.pin(d.withColumn("syms",
+          grp.foldLeft(col("syms"))((c, m) => applyMerge(c, m.lhs, m.rhs))))
         // release only OUR superseded batch boundaries — the caller
         // owns the input table's pins
-        release(d, pins)
-        pins = nextPins
+        if (d ne words) Pins.release(d)
         next
       }
     enc.withColumn("n_sub", size(col("syms")))

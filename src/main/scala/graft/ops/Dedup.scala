@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Pins
+
 /** Document deduplication operators for large-corpus pipelines: exact
   * (content-hash groupBy), MinHash/LSH near-dup, SimHash, and n-gram Jaccard.
   *
@@ -195,8 +197,8 @@ object Dedup {
     * matching signature components. */
   def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
                         n: Int = 3, k: Int = 32, bands: Int = 8): DataFrame = {
-    val sigs = minhashSignatures(df, idCol, textCol, n, k)
-      .localCheckpoint(true) // reused for banding and for pair scoring
+    // pinned: reused for banding and for pair scoring
+    val sigs = Pins.pin(minhashSignatures(df, idCol, textCol, n, k))
     candidatePairsFromSigs(sigs, k, bands)
       .select(col("id_a"), col("id_b"),
         (col("agree").cast("double") / k).as("est_jaccard"))
@@ -264,7 +266,7 @@ object Dedup {
   def hammingBandedPairs(sigs: DataFrame, idCol: String, hashCol: String,
                          maxDist: Int): DataFrame = {
     require(maxDist >= 0, s"maxDist must be >= 0, got $maxDist")
-    val pinned = sigs.localCheckpoint(true)
+    val pinned = Pins.pin(sigs)
     def banded(suffix: String): DataFrame =
       pinned.select(col(idCol).as(s"id_$suffix"),
           col(hashCol).as(s"h_$suffix"),
@@ -354,11 +356,11 @@ object Dedup {
     // array would trip the absence guard below with a wrong diagnosis;
     // after this, a null in the joined sh column can ONLY mean the
     // left-join missed, i.e. the document truly is not in df
-    val sh = df.join(ids, col(idCol) === col("__ct_id"), "left_semi")
+    val sh = Pins.pin(df.join(ids, col(idCol) === col("__ct_id"),
+        "left_semi")
       .select(col(idCol).as("__ct_doc"),
         coalesce(shingles(col(textCol), n), lit(Array.empty[String]))
-          .as("sh"))
-      .localCheckpoint(eager = true)
+          .as("sh")))
     def guarded(side: Column): Column =
       when(side.isNull, raise_error(concat(
         lit("containmentOverPairs: pair ("), col("id_a").cast("string"),
@@ -402,12 +404,9 @@ object Dedup {
     * partial clustering.
     *
     * Checkpoint hygiene: superseded label tables and the edge table are
-    * unpersisted as the loop advances (only the RETURNED labels stay
-    * pinned). The tracking diffs the context's persistent-RDD set
-    * around each checkpoint, so the call assumes NO CONCURRENT
-    * persist/checkpoint activity on the same SparkContext — true for
-    * this engine's single-threaded driver paths (Verify, Bench, the
-    * batch pipeline); do not call it from parallel driver threads.
+    * released as the loop advances (only the RETURNED labels stay
+    * pinned) — without this a deep component leaves O(iterations) full
+    * label-table copies in executor storage for the life of the job.
     *
     * `nodes` (single id column) adds isolated nodes so singletons
     * surface with their own id as `group_id`; otherwise only nodes with
@@ -417,20 +416,13 @@ object Dedup {
                       nodes: Option[DataFrame] = None,
                       maxIter: Int = 25): DataFrame = {
     val sc = pairs.sparkSession.sparkContext
-    // track each checkpoint's block-manager pins so superseded label
-    // tables release as the loop advances — without this a deep
-    // component leaves O(iterations) full label-table copies cached
-    // for the life of the job ([[graft.core.Pins]], the shared idiom;
-    // single-threaded-driver contract documented there)
-    def release(ids: Set[Int]): Unit = graft.core.Pins.release(sc, ids)
-
     val half = pairs.select(col(a).cast("long").as("u"),
       col(b).cast("long").as("v"))
     // NOTE (measured, 2026-08-19): pre-partitioning this checkpoint on
     // the per-iteration join key (repartition(v) here, repartition(id)
     // on each label checkpoint) was tried and REVERTED — under AQE the
     // executed plan reports UnknownPartitioning at checkpoint-capture
-    // time (CcPlanProbe: LogicalRDD outputPartitioning =
+    // time (the pinned LogicalRDD's outputPartitioning reads
     // UnknownPartitioning(0) even after an explicit repartition), so
     // the downstream joins re-exchange anyway and the extra
     // repartitions were pure cost (dedup_groups 110 -> 122 AQE stage
@@ -438,7 +430,7 @@ object Dedup {
     // with AQE off the elision would work, but AQE's runtime skew-join
     // splitting is worth more at real scale (a hot component's label
     // join is exactly the §2.5 skew case).
-    val (edges, edgePins) = graft.core.Pins.ckpt(
+    val edges = Pins.pin(
       half.unionByName(half.select(col("v").as("u"), col("u").as("v")))
         .where(col("u") =!= col("v")).distinct())
     val ids = nodes match {
@@ -458,12 +450,11 @@ object Dedup {
       case None => half.select(col("u").as("id"))
         .unionByName(half.select(col("v").as("id"))).distinct()
     }
-    var (labels, labelPins) = graft.core.Pins.ckpt(
-      ids.withColumn("group_id", col("id")))
+    var labels = Pins.pin(ids.withColumn("group_id", col("id")))
 
     // Size-gated RDD fast path (guide §1.2 step 1 + §2.2). The
     // DataFrame loop below is latency-bound, not work-bound: each
-    // iteration's ckptCount action expands under AQE into ~9 stage
+    // iteration's pinWith action expands under AQE into ~9 stage
     // jobs (one per Exchange/broadcast materialization), each paying a
     // ~20 ms driver re-plan/schedule gap — measured 1.8 s of task work
     // inside 4.1 s of wall on the dedup_groups oracle graph. For a
@@ -525,19 +516,16 @@ object Dedup {
       var conv = false
       while (!conv && it < maxIter) {
         val next = step(lab).persist(StorageLevel.MEMORY_AND_DISK)
-        val changed = nChanged(lab, next)
-        if (sys.env.contains("GRAFT_CC_DEBUG"))
-          println(s"[cc-rdd] iter $it changed=$changed")
-        conv = changed == 0L
+        conv = nChanged(lab, next) == 0L
         lab.unpersist(blocking = false); lab = next
         it += 1
       }
       if (!conv) conv = nChanged(lab, step(lab)) == 0L
       eByV.unpersist(blocking = false)
-      release(edgePins)
+      Pins.release(edges)
       if (!conv) {
         lab.unpersist(blocking = false)
-        release(labelPins)
+        Pins.release(labels)
       }
       require(conv,
         s"connectedGroups did not converge in $maxIter iterations — " +
@@ -550,7 +538,7 @@ object Dedup {
       // identity-label checkpoint can be released instead of staying
       // pinned for the session behind a per-consumption rescan
       val nNull = labels.where(col("id").isNull).count()
-      release(labelPins)
+      Pins.release(labels)
       val out = lab.toDF("id", "group_id")
       return if (nNull == 0L) out
       else out.unionByName(spark.createDataFrame(
@@ -605,23 +593,22 @@ object Dedup {
     // the min-step's INTERNAL jump already keeps chains at depth <= 2
     // between rounds, so the convergence tail (8/5/2/2 changed nodes)
     // is genuine hop-by-hop propagation of new minima, not pointer
-    // depth, and each wasted zero-change jump added a full ckptCount
+    // depth, and each wasted zero-change jump added a full pinWith
     // action per round (dedup_groups 4.2 -> 7.1 s).
     var i = 0
     var converged = false
     while (!converged && i < maxIter) {
       // the convergence count rides the SAME job that materializes the
-      // checkpoint (Pins.ckptCount): the eager-ckpt-then-isEmpty form
+      // checkpoint (Pins.pinWith): the eager-ckpt-then-isEmpty form
       // paid a second pass over the pinned labels every iteration —
       // at scale a full re-scan of the label table per round, locally
       // one-to-three extra take-jobs' scheduling latency.
-      val (next, nextPins, changed) = graft.core.Pins.ckptCount(
-        minStep(labels.select(col("id"), col("group_id"))), col("_chg"))
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"[cc] iter $i changed=$changed")
+      val (next, changed) = Pins.pinWith(
+        minStep(labels.select(col("id"), col("group_id"))))(
+        _.where(col("_chg")).count())
       converged = changed == 0L
-      release(labelPins)
-      labels = next; labelPins = nextPins
+      Pins.release(labels)
+      labels = next
       i += 1
     }
     if (!converged) {
@@ -634,8 +621,8 @@ object Dedup {
     }
     // the returned labels are independently pinned; the (larger) edge
     // table is not needed past this point
-    release(edgePins)
-    if (!converged) release(labelPins)
+    Pins.release(edges)
+    if (!converged) Pins.release(labels)
     require(converged,
       s"connectedGroups did not converge in $maxIter iterations — " +
         "component diameter exceeds the near-dup regime this operator " +
@@ -759,10 +746,9 @@ object Dedup {
     // sides + the final join-back) read the ranked table — unpinned,
     // each re-executes the join + window lineage from the scan
     // (ReuseExchange does not fire; ScanCensus/§22)
-    val ranked = vectors.join(assigned, idCol)
+    val ranked = Pins.pin(vectors.join(assigned, idCol)
       .select(col(idCol), col("v"), col("cid"),
-        row_number().over(w).as("__sd_r"))
-      .localCheckpoint(eager = true)
+        row_number().over(w).as("__sd_r")))
     val a = ranked.select(col("cid"), col(idCol).as("__sd_ida"),
       col("v").as("__sd_va"), col("__sd_r").as("__sd_ra"))
     val b = ranked.select(col("cid"), col(idCol).as("__sd_idb"),

@@ -80,7 +80,7 @@ object MedianMadAgg {
     // memcpy of the doubles) instead of a generic kryo object stream —
     // measured ~1.35× on the aggregate at the A8 shape, warm
     // clean-iteration best 4.27 s (kryo) → 3.16 s (native)
-    // (MedianShuffleBench interleaved cross-JVM pairs, SCALE_r07.md §1)
+    // (interleaved cross-JVM pairs, SCALE_r07.md §1)
     def bufferEncoder: Encoder[Array[Double]] =
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Double]]()
     def outputEncoder: Encoder[Result] = Encoders.product[Result]

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.core.Pins
+
 /** Deterministic multinomial Naive Bayes over unigram token counts —
   * the LEARNED complement to the rule-based quality filters
   * (`quality_gopher`, `text_repetition`): every production curation
@@ -74,23 +76,23 @@ object NaiveBayes {
     // table (V = its distinct tokens, n_tokens_c = Σ_t c), never from a
     // second pass over the corpus explode.
     // the vocabulary-size read rides the SAME job that materializes
-    // the checkpoint (Pins.ckptWith — the distinct-count aggregation
+    // the checkpoint (Pins.pinWith — the distinct-count aggregation
     // computes every partition): the eager-ckpt-then-count form paid
     // one extra scheduled action per train
-    val (tokenCounts, _, vocab) = graft.core.Pins.ckptWith(
+    val (tokenCounts, vocab) = Pins.pinWith(
       tk.groupBy(col("token"), col("label"))
         .agg(count(lit(1)).as("c"))
         .withColumn("log_lik", round(log(col("c") + 1), 6)))(
       _.select(col("token")).distinct().count())
     // priors need one scan of the raw document table (not the token
     // explode); the doc total rides the pinning job the same way
-    val (classDocs, _, totalRow0) = graft.core.Pins.ckptWith(
+    val (classDocs, totalRow0) = Pins.pinWith(
       lab.groupBy(col("label")).agg(count(lit(1)).as("n_docs")))(
       _.agg(sum(col("n_docs"))).collect())
     val totalRow = totalRow0(0)
     val totalDocs = if (totalRow.isNullAt(0)) 0L else totalRow.getLong(0)
     require(totalDocs > 0, "NaiveBayes.train: empty corpus")
-    val classStats = classDocs
+    val classStats = Pins.pin(classDocs
       .join(tokenCounts.groupBy(col("label"))
         .agg(sum(col("c")).as("n_tokens")), Seq("label"), "left")
       .select(col("label"), col("n_docs"),
@@ -98,8 +100,7 @@ object NaiveBayes {
         round(log(col("n_docs").cast("double") / totalDocs), 6)
           .as("log_prior"),
         round(log(coalesce(col("n_tokens"), lit(0L)) + vocab), 6)
-          .as("log_norm"))
-      .localCheckpoint(eager = true)
+          .as("log_norm")))
     Model(classStats, tokenCounts, vocab)
   }
 
@@ -126,10 +127,9 @@ object NaiveBayes {
     // topKCosineRp rule): the likelihood sum and the occurrence count
     // both read it, and unpinned each would re-execute the corpus
     // explode + vocabulary semi-join (ScanCensus/§22)
-    val tk = toks(df, textCol, col(idCol))
+    val tk = Pins.pin(toks(df, textCol, col(idCol))
       .join(model.tokenCounts.select(col("token")).distinct(),
-        Seq("token"), "left_semi")
-      .localCheckpoint(eager = true)
+        Seq("token"), "left_semi"))
     val s1 = tk.join(model.tokenCounts.select(col("token"), col("label"),
         col("log_lik")), Seq("token"))
       .groupBy(col(idCol), col("label"))

@@ -17,7 +17,7 @@ import graft.functions.VectorExpressions.HouseholderRotate
   * preserved to fp round-off, while the dominant variance direction
   * lands in subspace 0 where a codebook can model it explicitly
   * instead of smearing across all S subspaces. Whether that helps
-  * ADC recall is MEASURED (OpqRecallProbe / SCALE_r10.md), not
+  * ADC recall is MEASURED (SCALE_r10.md), not
   * assumed.
   *
   * Scale shape: `u` is driver arithmetic on D doubles (from the

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.core.Pins
+
 /** Exact interpolated percentile as a gather-and-sort Aggregator.
   *
   * Spark's builtin `percentile` aggregate maintains a value->count map
@@ -151,7 +153,7 @@ object PercentileAgg {
     // re-executed its full-table scan in every downstream job that
     // broadcast it — fusing them into this checkpoint drops two of the
     // ~five scans a level-0 call made
-    val ranks = vdf.groupBy(kcols: _*)
+    val ranks = Pins.pin(vdf.groupBy(kcols: _*)
       .agg(count(lit(1)).as("_n"), min(col("_v")).as("_mn"),
         max(col("_v")).as("_mx"))
       .withColumn("_pos", (col("_n") - 1).cast("double") * lit(p))
@@ -159,8 +161,7 @@ object PercentileAgg {
       .withColumn("_klo", floor(col("_pos")).cast("long") + 1)
       .withColumn("_khi", least(col("_klo") + 1, col("_n")))
       .select(kcols :+ col("_n") :+ col("_klo") :+ col("_khi") :+
-        col("_frac") :+ col("_mn") :+ col("_mx"): _*)
-      .localCheckpoint(true)
+        col("_frac") :+ col("_mn") :+ col("_mx"): _*))
     if (gatherable(ranks, maxGather))
       return arrTable(vdf, kcols)
         .join(broadcast(ranks.select(kcols :+ col("_klo") :+
@@ -274,10 +275,9 @@ object PercentileAgg {
     val vdf = df.where(col(valueCol).isNotNull)
       .select(kcols :+ col(valueCol).as("_v"): _*)
     // the ONE shared aggregation pass (count/min/max per group)
-    val ranks0 = vdf.groupBy(kcols: _*)
+    val ranks0 = Pins.pin(vdf.groupBy(kcols: _*)
       .agg(count(lit(1)).as("_n"), min(col("_v")).as("_mn"),
-        max(col("_v")).as("_mx"))
-      .localCheckpoint(true)
+        max(col("_v")).as("_mx")))
     // fan the pinned per-group row out to one row per (group, quantile):
     // rank arithmetic matches percentileSelect exactly — (n-1)*p with the
     // SAME literal p, so _frac/_klo/_khi are bit-identical per quantile
@@ -394,19 +394,17 @@ object PercentileAgg {
       // single-quantile routing (its ranks table is already one row per
       // key, which (keys, _qi) now is)
       val sel = proj(bigRows, qkeyIdx :+ (nk + 1) :+ (nk + 3))
-      val sub = bucketed.join(broadcast(sel), keys :+ "_b")
-        .select(kcols :+ col("_qi") :+ col("_v") :+ col("_cumStart"): _*)
-        .localCheckpoint(true)
+      val sub = Pins.pin(bucketed.join(broadcast(sel), keys :+ "_b")
+        .select(kcols :+ col("_qi") :+ col("_v") :+ col("_cumStart"): _*))
       val nextVdf = sub.select(kcols :+ col("_qi") :+ col("_v"): _*)
-      val nextRanks = ranksQ
+      val nextRanks = Pins.pin(ranksQ
         .join(broadcast(sub.groupBy(kcols :+ col("_qi"): _*)
           .agg(first(col("_cumStart")).as("_off"),
             min(col("_v")).as("_smn"), max(col("_v")).as("_smx"))), qkeys)
         .select(kcols :+ col("_qi") :+
           (col("_klo") - col("_off")).as("_klo") :+
           (col("_khi") - col("_off")).as("_khi") :+ col("_frac") :+
-          col("_smn").as("_mn") :+ col("_smx").as("_mx"): _*)
-        .localCheckpoint(true)
+          col("_smn").as("_mn") :+ col("_smx").as("_mx"): _*))
       parts += selectLevel(nextVdf, nextRanks, qkeys, "_out", buckets,
         maxGather, level = 1)
     }
@@ -523,18 +521,16 @@ object PercentileAgg {
       // sub-bucket's own min/max ride the rank table so the next level
       // never re-scans for bounds.
       val sel = proj(bigRows, keyIdx :+ nk :+ (nk + 2))
-      val sub = bucketed.join(broadcast(sel), keys :+ "_b")
-        .select(kcols :+ col("_v") :+ col("_cumStart"): _*)
-        .localCheckpoint(true)
+      val sub = Pins.pin(bucketed.join(broadcast(sel), keys :+ "_b")
+        .select(kcols :+ col("_v") :+ col("_cumStart"): _*))
       val nextVdf = sub.select(kcols :+ col("_v"): _*)
-      val nextRanks = ranks
+      val nextRanks = Pins.pin(ranks
         .join(broadcast(sub.groupBy(kcols: _*)
           .agg(first(col("_cumStart")).as("_off"),
             min(col("_v")).as("_smn"), max(col("_v")).as("_smx"))), keys)
         .select(kcols :+ (col("_klo") - col("_off")).as("_klo") :+
           (col("_khi") - col("_off")).as("_khi") :+ col("_frac") :+
-          col("_smn").as("_mn") :+ col("_smx").as("_mx"): _*)
-        .localCheckpoint(true)
+          col("_smn").as("_mn") :+ col("_smx").as("_mx"): _*))
       parts += selectLevel(nextVdf, nextRanks, keys, outCol, buckets,
         maxGather, level + 1, maxLevels)
     }

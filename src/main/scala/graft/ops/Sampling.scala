@@ -319,8 +319,8 @@ object Sampling {
     * corollary, as everywhere in this module: `df` must be
     * rerun-deterministic, or the phase-1 boundary and the phase-2 rows
     * could disagree. Callers with an expensive non-staged upstream
-    * should localCheckpoint it themselves (the pipeline_curate
-    * stage-boundary idiom). */
+    * should pin it themselves (`graft.core.Pins.pin`, the
+    * pipeline_curate stage-boundary idiom). */
   def tokenBudgetSample(df: DataFrame, id: Column, priority: Column,
                         tokens: Column, budget: Long,
                         buckets: Int = 1024): DataFrame = {

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.core.Pins
+
 /** Text-analysis column expressions for corpus pipelines: token counting,
   * quality scoring, marker-based language scoring, and document
   * fingerprinting. All pure codegen'd expressions — no UDFs — and each is
@@ -166,11 +168,10 @@ object TextMetrics {
     // re-executes the corpus scan + count exchange (ReuseExchange does
     // NOT fire across these subtrees; explain-verified), turning one
     // corpus pass into two
-    val lc = df
+    val lc = Pins.pin(df
       .select(stratum.as("stratum"), explode(tokens(text)).as("token"))
       .groupBy(col("stratum"), col("token"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint(eager = true)
+      .agg(count(lit(1)).as("c")))
     val vocab = lc.groupBy(col("token")).agg(sum(col("c")).as("tc"))
       .orderBy(col("tc").desc, col("token"))
       .limit(v)
@@ -191,8 +192,8 @@ object TextMetrics {
     * corpus. ENTIRELY row-local: zero shuffles, the whole filter rides
     * the scan at 100 TB. Since round 8 this is the native
     * [[graft.functions.RepetitionSig]] expression (one hash-counting
-    * pass per row); TextHotBench measured the interpreted HOF form at
-    * 740–1113 ns/token vs ~60–70 for the expression family, making it
+    * pass per row); SCALE_r08's per-token benchmark measured the HOF
+    * form at 740–1113 ns/token vs ~60–70 for the expression family, making it
     * the hottest text operator — the same measurement-then-promotion
     * path the MinhashSig family took in round 7. Results are
     * bit-identical to [[repetitionFeaturesHof]], the retained in-repo
@@ -394,9 +395,8 @@ object TextMetrics {
     // scoring join read it, and unpinned each re-executed the corpus
     // explode+count (ScanCensus/§22). The remaining TWO corpus passes
     // (count build, scoring) are the honest train-then-score shape.
-    val c2 = rows.groupBy(col("bg"), col("w1"))
-      .agg(count(lit(1)).as("c2"))
-      .localCheckpoint(eager = true)
+    val c2 = Pins.pin(rows.groupBy(col("bg"), col("w1"))
+      .agg(count(lit(1)).as("c2")))
     val cp = c2.groupBy(col("w1")).agg(sum(col("c2")).as("cp"))
     rows
       .join(c2.join(cp, "w1").select(col("bg"), col("c2"), col("cp")), "bg")
@@ -478,11 +478,10 @@ object TextMetrics {
   def qualityBuckets(df: org.apache.spark.sql.DataFrame, idCol: String,
                      textCol: String,
                      langCol: String): org.apache.spark.sql.DataFrame = {
-    val scored = unigramLogprob(df, idCol, textCol)
+    val scored = Pins.pin(unigramLogprob(df, idCol, textCol)
       .join(df.select(col(idCol), col(langCol).as("lang")), idCol)
       .select(col(idCol), col("lang"),
-        round(col("avg_logprob"), 6).as("score"))
-      .localCheckpoint(true)
+        round(col("avg_logprob"), 6).as("score")))
     val terciles = PercentileAgg.percentileSelectMulti(scored, Seq("lang"),
       "score", Seq(1.0 / 3, 2.0 / 3), Seq("__qb_p33", "__qb_p67"))
     val bounds = broadcast(terciles

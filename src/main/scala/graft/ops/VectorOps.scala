@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graftshim.Internals.{column => toCol, expression => toExpr}
 
+import graft.core.Pins
 import graft.functions.VectorExpressions.{ArrayEqCount, CosineSim, DotProduct, LshBucket, RandomProject}
 
 /** Dense-vector column operations over `array<double>` columns:
@@ -139,9 +140,8 @@ object VectorOps {
     // production index persists): the shortlist's bounded-agg +
     // join-back phases both read it, and unpinned each re-derives the
     // projection from the corpus scan (ScanCensus/§22)
-    val cr = candidates.select(col(idCol).as("cand_id"),
-        randomProject(col(vecCol), dim, rDim).as("crv"))
-      .localCheckpoint(eager = true)
+    val cr = Pins.pin(candidates.select(col(idCol).as("cand_id"),
+        randomProject(col(vecCol), dim, rDim).as("crv")))
     val scored = cr.join(broadcast(qr.select(col("query_id"), col("qrv"))),
         col("query_id") =!= col("cand_id"))
       .select(col("query_id"), col("cand_id"),
@@ -240,13 +240,13 @@ object VectorOps {
         lit(", "), col("tgt_id").cast("string"),
         lit(") references a vector absent from src/tgt")))
         .cast("array<double>")).otherwise(side)
-    val scored = pairs.select(col("src_id"), col("tgt_id")).distinct()
+    val scored = Pins.pin(pairs.select(col("src_id"), col("tgt_id"))
+      .distinct()
       .join(s, Seq("src_id"), "left")
       .join(t, Seq("tgt_id"), "left")
       .select(col("src_id"), col("tgt_id"),
         round(cosine(guarded(col("__mm_sv")), guarded(col("__mm_tv"))), 6)
-          .as("cos"))
-      .localCheckpoint(true)
+          .as("cos")))
     def knnMean(key: String, other: String, out: String) = {
       val w = Window.partitionBy(col(key))
         .orderBy(col("cos").desc, col(other))
@@ -303,27 +303,15 @@ object VectorOps {
     * Scale shape: the bucket projection is row-local codegen (zero
     * shuffles); each band is one equi-join on a `planesPerBand`-bit
     * key; the union's distinct is bounded by the candidate count —
-    * never all-pairs. Returns (src_id, tgt_id). */
+    * never all-pairs. Returns (src_id, tgt_id). At bands > 1 the
+    * returned table is a pin (`DataFrame.unpersist` does not drop it):
+    * a caller done with the candidates — a loop sweeping band settings,
+    * a long session running many mines — hands it to
+    * `graft.core.Pins.release`; a one-shot caller leaves it to its
+    * scope or the ContextCleaner. */
   def lshBandedPairs(left: DataFrame, right: DataFrame, idCol: String,
                      vecCol: String, dim: Int, planesPerBand: Int = 5,
-                     bands: Int = 2): DataFrame =
-    lshBandedPairsPinned(left, right, idCol, vecCol, dim,
-      planesPerBand, bands)._1
-
-  /** [[lshBandedPairs]] plus the returned pair table's checkpoint pin
-    * ids (empty at bands=1, where nothing is materialized). The pair
-    * table at bands>1 is localCheckpoint-pinned — `DataFrame.unpersist`
-    * does NOT drop localCheckpoint RDD pins, so a caller that is done
-    * with the candidates (a tight loop sweeping band settings, a long
-    * session running many mines) releases deterministically via
-    * `graft.core.Pins.release(sc, ids)` instead of waiting on the
-    * ContextCleaner. One-shot callers (the oracle queries) can keep
-    * the plain overload: its single bounded pin lives until GC, which
-    * a once-per-query call absorbs — the loop case is what leaks. */
-  def lshBandedPairsPinned(left: DataFrame, right: DataFrame,
-                           idCol: String, vecCol: String, dim: Int,
-                           planesPerBand: Int = 5,
-                           bands: Int = 2): (DataFrame, Set[Int]) = {
+                     bands: Int = 2): DataFrame = {
     require(planesPerBand > 0 && bands > 0,
       s"need planesPerBand/bands > 0, got $planesPerBand/$bands")
     require(planesPerBand * bands <= 62,
@@ -349,25 +337,20 @@ object VectorOps {
           .join(r.select(col("tgt_id"), band.as("__lb_k")), "__lb_k")
           .select(col("src_id"), col("tgt_id"))
       }.reduce(_ unionByName _).distinct()
-    if (bands == 1) (bandUnion(bucketed(left, "src_id"),
-      bucketed(right, "tgt_id")), Set.empty[Int])
+    if (bands == 1)
+      bandUnion(bucketed(left, "src_id"), bucketed(right, "tgt_id"))
     else {
-      // ckpt/release hygiene ([[graft.core.Pins]] — the shared idiom,
-      // single-threaded-driver contract documented there): the two
-      // side pins exist only to serve the band joins, and relying on
-      // the ContextCleaner to drop them accumulates superseded
-      // corpus-projection blocks across repeated calls in a long
-      // session. Materialize the (candidate-bounded) pair table, then
-      // release the side pins deterministically; the single returned
-      // pin replaces two corpus-sided ones and is the caller's
-      // consumable (their contract — same as any localCheckpoint'd
-      // return in this repo).
-      val (l, lIds) = graft.core.Pins.ckpt(bucketed(left, "src_id"))
-      val (r, rIds) = graft.core.Pins.ckpt(bucketed(right, "tgt_id"))
-      val (pairs, pairIds) = graft.core.Pins.ckpt(bandUnion(l, r))
-      graft.core.Pins.release(left.sparkSession.sparkContext,
-        lIds ++ rIds)
-      (pairs, pairIds)
+      // the two side pins exist only to serve the band joins, and
+      // relying on the ContextCleaner to drop them accumulates
+      // superseded corpus-projection blocks across repeated calls in a
+      // long session. Materialize the (candidate-bounded) pair table,
+      // then release the side pins; the single returned pin replaces
+      // two corpus-sided ones and is the caller's to release.
+      val l = Pins.pin(bucketed(left, "src_id"))
+      val r = Pins.pin(bucketed(right, "tgt_id"))
+      val pairs = Pins.pin(bandUnion(l, r))
+      Pins.release(l, r)
+      pairs
     }
   }
 }

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Pins
 import graft.ops.RobustStats
 import graft.stencil.{CCL, Stencil}
 
@@ -134,10 +135,9 @@ object Classification {
     // computes the radial and azimuthal d2 in ONE fused tile pass)
     val d2 = d2Precomputed
       .map(_.select(kcols ++ Seq(col("y"), col("x"), col("grad2_r")): _*))
-      .getOrElse(
-        secondDirectionalDeriv(allPx, width, height, keys,
-          "rhat_y", "rhat_x").withColumnRenamed("grad2", "grad2_r")
-          .localCheckpoint(true)) // feeds threshold, on_arc, wedge stages
+      .getOrElse( // pinned: feeds the threshold, on_arc, wedge stages
+        Pins.pin(secondDirectionalDeriv(allPx, width, height, keys,
+          "rhat_y", "rhat_x").withColumnRenamed("grad2", "grad2_r")))
 
     // ---- A5: per-cluster central-band percentile vs global threshold --
     // d2 is the full frame; the labeled cluster side broadcasts so the
@@ -151,12 +151,12 @@ object Classification {
       val (labeledPinned, labeledN) = labeledRows match {
         case Some(n) => (labeled, n)
         case None =>
-          val (pinned, _, n) = graft.core.Pins.ckptWith(labeled)(_.count())
+          val (pinned, n) = Pins.pinWith(labeled)(_.count())
           (pinned, n)
       }
       val labHint = if (labeledN <= 1000000L)
         broadcast(labeledPinned) else labeledPinned
-      d2.join(labHint, keys :+ "y" :+ "x").localCheckpoint(true)
+      Pins.pin(d2.join(labHint, keys :+ "y" :+ "x"))
     }
     // distributed rank-selection percentile: the gather-and-sort
     // aggregator ran its final sort in ONE task per frame — the measured
@@ -331,19 +331,18 @@ object Classification {
     // table and the fused kernel's scalar mirror, and closing clips to
     // frame bounds so membership matches the join), computed directly
     // on the TINY cluster table; the join form re-scanned the 33M-row
-    // frame to decorate ~1e3 rows (~4 s/batch warm, WarmProbe) and is
+    // frame to decorate ~1e3 rows (measured ~4 s/batch warm) and is
     // kept for callers without a calibration. Either way the decorated
     // table is pinned (reused by shape stats + refinement) and its row
     // count — the refinement's broadcast gate — is the pin's action.
-    lazy val (labeled, _, labeledN) = graft.core.Pins.ckptWith(cal match {
+    lazy val (labeled, labeledN) = Pins.pinWith(cal match {
       case Some(c) =>
         graft.geometry.Geometry.attach(closed, c)
           .select(keys.map(col) ++ Seq(col("y"), col("x"), col("q"),
             col("azim"), col("azim_flipped"), col("label")): _*)
       case None =>
         // count-gated broadcast: the full frame table never shuffles
-        val (labeled0, _, n0) =
-          graft.core.Pins.ckptWith(closed)(_.count())
+        val (labeled0, n0) = Pins.pinWith(closed)(_.count())
         val lab0 = if (n0 <= 1000000L) broadcast(labeled0) else labeled0
         framePx.select(keys.map(col) ++
             Seq(col("y"), col("x"), col("q"), col("azim"),

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Calibration, SyntheticFrame}
+import graft.core.{Calibration, Pins, SyntheticFrame}
 import graft.geometry.Geometry
 import graft.ops.{Corrections, Histogram, RobustStats}
 
@@ -59,7 +59,7 @@ object FramePipeline {
     *    HashAggregate (no distinct, no imperative agg — mixing either in
     *    would downgrade every aggregate to the interpreted object path:
     *    a one-pass-everything variant measured SLOWER than chained,
-    *    NarrowFuseBench r6);
+    *    SCALE_r06);
     *  - exact median/MAD via the one-pass buffering aggregator on the
     *    narrow (frame, q_bin, grad2) projection — ObjectHashAggregate,
     *    one scan where the two-stage form took two plus a join;
@@ -155,7 +155,7 @@ object FramePipeline {
     // (ring populations are bounded, SURVEY §2.12 item 3). Pinned so the
     // join below does not recompute the aggregate; the row count that
     // gates the join strategy is the pin's own materializing action.
-    val (ringStats, _, ringRows) = graft.core.Pins.ckptWith(
+    val (ringStats, ringRows) = Pins.pinWith(
       RobustStats.medianMadOnePass(
         live.select(col("frame_no"), col("tth_bin"),
           col("corr_i").as("ival")),
@@ -229,13 +229,13 @@ object FramePipeline {
     // inside the tile kernel and downstream stages read the fused
     // CHECKPOINT, so the rule holds with one materialization fewer.
     val (narrow, gradBoth) = if (inlineGeometry) {
-      val core = flaggedI.select(col("frame_no"), col("y"), col("x"),
-          col("corr_i"), col("corr"), col("base_mask"), col("is_outlier"))
-        .localCheckpoint(true)
-      val fused = graft.stencil.Stencil.secondDirectionalDerivNarrowRaw(
+      val core = Pins.pin(flaggedI.select(col("frame_no"), col("y"),
+        col("x"), col("corr_i"), col("corr"), col("base_mask"),
+        col("is_outlier")))
+      val fused = Pins.pin(
+        graft.stencil.Stencil.secondDirectionalDerivNarrowRaw(
           core, w, h, Geometry.scalarPixelGeoInto(cal),
-          Geometry.scalarPixelHatsInto(cal), tile = 512)
-        .localCheckpoint(true)
+          Geometry.scalarPixelHatsInto(cal), tile = 512))
       // the kernel's packed key widens frame_no to long; restore the
       // input's type so downstream output schemas are unchanged
       val fno = pixels.schema("frame_no").dataType
@@ -246,24 +246,21 @@ object FramePipeline {
        fused.select(col("frame_no"), col("y"), col("x"),
          col("grad2_r"), col("grad2_a"), col("q_bin")))
     } else {
-      val flagged = flaggedI
-        .drop("pol", "dist_sq", "in_tth_range", "in_azim_range", "azim_band")
-        .localCheckpoint(true)
+      val flagged = Pins.pin(flaggedI.drop("pol", "dist_sq",
+        "in_tth_range", "in_azim_range", "azim_band"))
       // Both second directional derivatives (radial for classification,
       // azimuthal for the A8 gradient stats) in ONE fused tile pass with
       // q_bin carried through. Only (key, y, x, corr) crosses the
       // exchange; hats and q_bin are recomputed in-kernel from the
       // scalar geometry mirror.
-      val gb = graft.stencil.Stencil.secondDirectionalDerivGeoRaw(
+      val gb = Pins.pin(graft.stencil.Stencil.secondDirectionalDerivGeoRaw(
           flagged.select(col("frame_no"), col("y"), col("x"),
             col("corr").as("v")),
-          w, h, Geometry.scalarPixelGeo(cal), tile = 512)
-        .localCheckpoint(true)
-      val nr = flagged.select(col("frame_no"), col("y"), col("x"),
+          w, h, Geometry.scalarPixelGeo(cal), tile = 512))
+      val nr = Pins.pin(flagged.select(col("frame_no"), col("y"), col("x"),
           col("x_mm"), col("y_mm"), col("corr_i"), col("corr"),
           col("base_mask"), col("is_outlier"), col("tth_bin"),
-          col("q_bin"), col("q"), col("azim"), col("azim_flipped"))
-        .localCheckpoint(true)
+          col("q_bin"), col("q"), col("azim"), col("azim_flipped")))
       // the shared A8+A9 aggregate reads grad2_a alongside the narrow
       // columns; on this (non-default, spec-pinned) path that takes an
       // explicit 1:1 join of the two checkpoints — the fused path gets
@@ -283,7 +280,7 @@ object FramePipeline {
     // the narrow checkpoint (it needs q/azim/azim_flipped, all there);
     // passing cal lets it derive cluster geometry closed-form instead of
     // re-scanning that checkpoint for the label join.
-    val (flags, _, flagRows) = graft.core.Pins.ckptWith(
+    val (flags, flagRows) = Pins.pinWith(
       Classification.classify(narrow, w, h, keys, params,
         d2Precomputed = Some(gradBoth), cal = Some(cal)))(_.count())
     // flag rows are outlier-cluster pixels — orders of magnitude smaller

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.core.Pins
 import graft.ops._
 
 /** The driver-graded query inventory: every entry is one operator shape from
@@ -2138,9 +2139,8 @@ object OracleQueries {
         // materialize the shingle arrays: the self-join would otherwise
         // re-inline the shingle expression into every pair comparison
         // (CollapseProject), turning O(n) shingling into O(n^2)
-        val d = t(s, dir, "documents").where(col("doc_id") < 50)
-          .select(col("doc_id"), Dedup.shingles(col("text"), 3).as("sh"))
-          .localCheckpoint(true)
+        val d = Pins.pin(t(s, dir, "documents").where(col("doc_id") < 50)
+          .select(col("doc_id"), Dedup.shingles(col("text"), 3).as("sh")))
         val a = d.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
         val b = d.select(col("doc_id").as("id_b"), col("sh").as("sh_b"))
         a.join(b, col("id_a") < col("id_b"))
@@ -2883,10 +2883,9 @@ object OracleQueries {
         // ONE corpus scan via the staged narrow per-doc projection —
         // the text_bm25 shape (SCALE_r09 §22): tf, df and N all read
         // the pinned table instead of re-executing the scan
-        val perDoc = docs.select(col("doc_id"),
+        val perDoc = Pins.pin(docs.select(col("doc_id"),
             filter(TextMetrics.tokens(col("text")),
-              tk => tk.isin(terms: _*)).as("qtoks"))
-          .localCheckpoint(eager = true)
+              tk => tk.isin(terms: _*)).as("qtoks")))
         val tf = perDoc
           .select(col("doc_id"), explode(col("qtoks")).as("token"))
           .groupBy(col("doc_id"), col("token"))
@@ -3472,10 +3471,9 @@ object OracleQueries {
           CmsDepth, CmsWidth)
         // bounded exact-reference table, pinned: the probe AND the
         // comparison join both read it (ScanCensus/§22)
-        val keys = ev.groupBy(col("user_id"))
+        val keys = Pins.pin(ev.groupBy(col("user_id"))
           .agg(count(lit(1)).as("n_exact"))
-          .where(col("user_id") < 50)
-          .localCheckpoint(eager = true)
+          .where(col("user_id") < 50))
         Sketches.cmsEstimate(sketch, keys.select(col("user_id")),
             "user_id", CmsDepth, CmsWidth)
           .join(keys, "user_id")
@@ -3881,7 +3879,7 @@ object OracleQueries {
     // inside subspace 0 instead of smearing across all 8 axis-aligned
     // subspaces. Measured: ADC recall@5 0.142 -> 0.292 on
     // diagonal-variance geometry, 0.108 -> 0.125 on the sf0.1 corpus
-    // (OpqRecallProbe, SCALE_r10.md). Rotation, training and encoding
+    // (SCALE_r10.md). Rotation, training and encoding
     // are staged (PqStage.stagedOpq, composing PcaStage's direction);
     // the oracle starts from the DUMPED rotated vectors (parquet
     // round-trips doubles bit-for-bit; the rotation arithmetic itself
@@ -4389,9 +4387,8 @@ object OracleQueries {
     // materialize-before-self-join rule as dedup_ngram_jaccard.
     Q("dedup_containment",
       (s, dir) => {
-        val d = t(s, dir, "documents").where(col("doc_id") < 50)
-          .select(col("doc_id"), Dedup.shingles(col("text"), 3).as("sh"))
-          .localCheckpoint(true)
+        val d = Pins.pin(t(s, dir, "documents").where(col("doc_id") < 50)
+          .select(col("doc_id"), Dedup.shingles(col("text"), 3).as("sh")))
         val a = d.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
         val b = d.select(col("doc_id").as("id_b"), col("sh").as("sh_b"))
         a.join(b, col("id_a") < col("id_b"))
@@ -4539,8 +4536,8 @@ object OracleQueries {
         // (The r16 probe that measured fan-out OFF for this query
         // fanned the stage-1 SCAN — re-keyed by every downstream agg —
         // not the pinned boundary itself.)
-        val s1 = withFanout(fanout(s, CurateStages.cleanedCorpus(s, docs)))
-          .localCheckpoint(eager = true)
+        val s1 = Pins.pin(
+          withFanout(fanout(s, CurateStages.cleanedCorpus(s, docs))))
         // 4. near dedup: LSH candidates >= 0.5 est-Jaccard, connected
         // groups, drop every non-canonical (id != group_id) member
         val cand = Dedup.minhashCandidates(s1, "doc_id", "text",
@@ -4564,10 +4561,9 @@ object OracleQueries {
         // curated table carries only the four narrow columns into the
         // sampler/packer, and is materialized because the two-phase
         // top-k references its base twice (agg + join-back)
-        val s3 = s2.join(contam, Seq("doc_id"), "left_anti")
+        val s3 = Pins.pin(s2.join(contam, Seq("doc_id"), "left_anti")
           .select(col("doc_id"), col("lang"), col("n_chars"),
-            TextMetrics.tokenCount(col("text")).cast("long").as("__pc_tok"))
-          .localCheckpoint(eager = true)
+            TextMetrics.tokenCount(col("text")).cast("long").as("__pc_tok")))
         // 6. weighted exact-N per language (weight = document length)
         val samp = Sampling.weightedSampleExactN(s3, col("lang"),
           col("doc_id"), col("n_chars"), n = 10)
@@ -4757,10 +4753,9 @@ object OracleQueries {
         // the routing's eager legs and the final filter all read
         // (doc_id, lang, n_tok) — 16-byte rows — instead of each
         // re-tokenizing the text column from the parquet scan
-        val lens = t(s, dir, "documents")
+        val lens = Pins.pin(t(s, dir, "documents")
           .select(col("doc_id"), col("lang"),
-            TextMetrics.tokenCount(col("text")).cast("long").as("n_tok"))
-          .localCheckpoint(true)
+            TextMetrics.tokenCount(col("text")).cast("long").as("n_tok")))
         val bounds = PercentileAgg.percentileSelectMulti(
             lens.select(col("lang"), col("n_tok").cast("double")
               .as("v")), Seq("lang"), "v", Seq(0.05, 0.95),
@@ -5710,11 +5705,10 @@ object OracleQueries {
         // (explain-verified; ReuseExchange does not fire here). At
         // 100 TB this stage boundary is the parquet staging table a
         // production ranker writes.
-        val perDoc = docs.select(col("doc_id"),
+        val perDoc = Pins.pin(docs.select(col("doc_id"),
             TextMetrics.tokenCount(col("text")).as("dl"),
             filter(TextMetrics.tokens(col("text")),
-              tk => tk.isin(terms: _*)).as("qtoks"))
-          .localCheckpoint(eager = true)
+              tk => tk.isin(terms: _*)).as("qtoks")))
         val tf = perDoc
           .select(col("doc_id"), col("dl"),
             explode(col("qtoks")).as("token"))

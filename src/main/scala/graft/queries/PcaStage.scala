@@ -72,7 +72,7 @@ object PcaStage {
       // fan out the fit read (guide §2.5's unsplittable-input case): the
       // covariance pass floors D(D+1)/2 = 2080 products per row, and the
       // raw single-row-group test parquet otherwise serializes all of it
-      // on one core. Interleaved A/B (StageFanoutAB, 3 reps, one JVM):
+      // on one core. Interleaved A/B (fan-out on/off, 3 reps, one JVM):
       // fanned fit 0.74x of raw at the healthiest rep and 0.17x at the
       // bus-throttled one (5.70 -> 0.94 s) — the exchange is one bounded
       // shuffle of the ~N x 64-double vectors, repaid 2080-fold by the

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Overlap
+import graft.core.{Overlap, Pins}
 import graft.ops.Pq
 
 /** Staged PQ artifacts for the search queries — the separation a real
@@ -108,17 +108,16 @@ object PqStage {
       // repartition), an exchange of the tiny (id, 8-byte-codes) rows
       // only: the encode projection runs on the 32 map-side tasks and
       // the checkpoint materializes the single reduce partition.
-      // Interleaved A/B (StageFanoutAB): encode+checkpoint 1.26 s raw ->
+      // Interleaved A/B (fan-out on/off): encode+checkpoint 1.26 s raw ->
       // 0.37 s fanned (min of 3 reps; throttled tail 7.88 -> 0.52).
       val eFan = OracleQueries.withFanout(embeddings(s, dir))
       val e = embeddings(s, dir)
       val (cb, _) = Pq.train(eFan, "vec_id", "v", Sub, Dim, K, Iters)
-      val codes = Pq.encodeLocal(eFan, "vec_id", "v", cb, Sub, Dim)
-        .repartition(1, col("id"))
-        .localCheckpoint(eager = true)
-      val withCell = codes
-        .join(e.select(col("vec_id").as("id"), col("label")), "id")
-        .localCheckpoint(eager = true)
+      val codes = Pins.pin(
+        Pq.encodeLocal(eFan, "vec_id", "v", cb, Sub, Dim)
+          .repartition(1, col("id")))
+      val withCell = Pins.pin(codes
+        .join(e.select(col("vec_id").as("id"), col("label")), "id"))
       Staged(cb, codes, withCell, cellCentroids(s, dir))
     }
 
@@ -132,7 +131,7 @@ object PqStage {
     * reflection that maps the staged PCA direction onto e1
     * ([[graft.ops.Opq]] — an isometry, so exact-neighbor ground truth
     * is unchanged), a codebook trained IN THE ROTATED SPACE, and the
-    * rotated-space codes. Measured motive (OpqRecallProbe, SCALE_r10):
+    * rotated-space codes. Measured motive (SCALE_r10):
     * ADC recall@5 0.142 -> 0.292 on diagonal-variance geometry, where
     * an axis-aligned subspace split cannot see the dominant direction.
     * The rotation composes the two staged families: the reflection
@@ -149,25 +148,23 @@ object PqStage {
       // one partition before its checkpoint — search probes filter this
       // artifact, so its partition count stays the raw scan's layout
       // (the staged() rule above)
-      val rot = OracleQueries.withFanout(embeddings(s, dir))
+      val rot = Pins.pin(OracleQueries.withFanout(embeddings(s, dir))
         .select(col("vec_id"), col("label"),
           graft.ops.Opq.rotate(col("v"), u).as("v"))
-        .repartition(1, col("vec_id"))
-        .localCheckpoint(eager = true)
+        .repartition(1, col("vec_id")))
       // train and encode read a fanned-out view of the pinned rotation
       // (compute-bound: Lloyd, PqEncodeSig); the checkpointed artifacts
       // keep the single partition
       val rotFan = OracleQueries.withFanout(OracleQueries.fanout(s, rot))
       val (cb, _) = Pq.train(rotFan, "vec_id", "v", Sub, Dim, K, Iters)
-      val codes = Pq.encodeLocal(rotFan, "vec_id", "v", cb, Sub, Dim)
-        .repartition(1, col("id"))
-        .localCheckpoint(eager = true)
+      val codes = Pins.pin(
+        Pq.encodeLocal(rotFan, "vec_id", "v", cb, Sub, Dim)
+          .repartition(1, col("id")))
       // the rotated-space IVF-PQ index layout: the coarse cell (the
       // label — a rotation-INVARIANT key, nothing geometric about it)
       // resolved at build time, riding next to the rotated-space codes
-      val withCell = codes
-        .join(rot.select(col("vec_id").as("id"), col("label")), "id")
-        .localCheckpoint(eager = true)
+      val withCell = Pins.pin(codes
+        .join(rot.select(col("vec_id").as("id"), col("label")), "id"))
       StagedOpq(u, rot, cb, codes, withCell)
     }
 
@@ -181,14 +178,13 @@ object PqStage {
     * codebook training; the IVF-PQ stage composes it. */
   def cellCentroids(s: SparkSession, dir: String): DataFrame =
     centMemo(s, dir) {
-      embeddings(s, dir)
+      Pins.pin(embeddings(s, dir)
         .select(col("label"), posexplode(col("v")).as(Seq("i", "x")))
         .groupBy(col("label"), col("i"))
         .agg((sum(col("x").cast("decimal(18,9)")).cast("double") /
           count(lit(1))).as("c"))
         .groupBy(col("label"))
         .agg(transform(array_sort(collect_list(struct(col("i"),
-          col("c")))), s => s.getField("c")).as("cv"))
-        .localCheckpoint(eager = true)
+          col("c")))), s => s.getField("c")).as("cv")))
     }
 }

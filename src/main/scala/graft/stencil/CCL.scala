@@ -3,6 +3,8 @@ package graft.stencil
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Pins
+
 /** Distributed connected-component labeling over sparse pixel sets.
   *
   * Reference: scipy.ndimage.label / skimage.measure.label over the outlier
@@ -99,7 +101,7 @@ object CCL {
     require(keys.size <= 1, "CCL supports at most one numeric frame key")
     val fkey0 = keys.headOption.map(col).getOrElse(lit(0))
     // the busiest-frame count is the pin's own materializing action
-    val (pinned, _, maxRow) = graft.core.Pins.ckptWith(active)(
+    val (pinned, maxRow) = Pins.pinWith(active)(
       _.groupBy(fkey0.as("_f")).count().agg(max(col("count"))).head())
     val maxPerFrame = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
     if (maxPerFrame > densePixelsPerFrame) {
@@ -278,7 +280,7 @@ object CCL {
     }.reduce(_ union _)
 
     // Per-frame union-find (min root) over the edge list.
-    val mapping = edges.as[(Long, Long, Long)]
+    val mapping = Pins.pin(edges.as[(Long, Long, Long)]
       .groupByKey(_._1)
       .mapGroups { (f, it) =>
         val parent = scala.collection.mutable.LongMap.empty[Long]
@@ -302,10 +304,9 @@ object CCL {
       }
       .toDF("_f", "m")
       .select(col("_f"), explode(col("m")).as("kv"))
-      .select(col("_f"), col("kv._1").as("id"), col("kv._2").as("root"))
       // materialized so the row count can gate the join strategy without
       // recomputing the union-find
-      .localCheckpoint(true)
+      .select(col("_f"), col("kv._1").as("id"), col("kv._2").as("root")))
 
     // broadcast growth guard (same rationale as flagOutliers): mapping
     // rows ≤ active pixels, which scale with frames per batch
@@ -345,7 +346,7 @@ object CCL {
     // in which case the re-projection over the checkpoint is free
     val nodes0 = active.select(kcols ++ Seq(col("y"), col("x"),
       fkey.as("_f"), pid.as("id")): _*)
-    val nodes = if (inputPinned) nodes0 else nodes0.localCheckpoint(true)
+    val nodes = if (inputPinned) nodes0 else Pins.pin(nodes0)
 
     val offs = if (eightConnected) Seq((0, 1), (1, -1), (1, 0), (1, 1))
                else Seq((0, 1), (1, 0))
@@ -406,7 +407,7 @@ object CCL {
       .select(col("_f"), col("ra"), col("rb")).distinct()
 
     // ---- phase 3: per-frame merge over boundary root edges ------------
-    val merge = rootEdges.as[(Long, Long, Long)]
+    val merge = Pins.pin(rootEdges.as[(Long, Long, Long)]
       .groupByKey(_._1)
       .mapGroups { (f, it) =>
         val parent = scala.collection.mutable.LongMap.empty[Long]
@@ -427,8 +428,8 @@ object CCL {
       }
       .toDF("_f", "m")
       .select(col("_f"), explode(col("m")).as("kv"))
-      .select(col("_f"), col("kv._1").as("lroot"), col("kv._2").as("groot"))
-      .localCheckpoint(true)
+      .select(col("_f"), col("kv._1").as("lroot"),
+        col("kv._2").as("groot")))
 
     // merge rows are O(boundary components) — usually tiny, but a
     // 10k-frame batch still multiplies them; same guard as [[label]]

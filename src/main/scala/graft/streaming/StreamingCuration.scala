@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
+import graft.core.Pins
 import graft.ops.TextMetrics
 
 /** The STREAMING curation pipeline as ONE foreachBatch composition — the
@@ -88,10 +89,12 @@ object StreamingCuration {
   /** One micro-batch of the composed pipeline (public so the parity
     * spec and a backfill driver can run it directly). `lines` carries
     * raw JSONL in its first column; `schema` is the ingest contract
-    * and must contain `idCol` (long) and `textCol` (string). */
+    * and must contain `idCol` (long) and `textCol` (string). The batch
+    * is one [[Pins.scope]]: every stage's output is written (the
+    * profile increment last) before its pins are released. */
   def processBatch(spark: SparkSession, lines: DataFrame, batchId: Long,
                    schema: StructType, idCol: String, textCol: String,
-                   outDir: String, cfg: Config = Config()): Unit = {
+                   outDir: String, cfg: Config = Config()): Unit = Pins.scope {
     // stage 1: contract parse; quarantined raw lines persist for replay
     val (clean, quarantined) =
       graft.sources.JsonlSource.parseWithQuarantine(lines, schema)
@@ -104,9 +107,8 @@ object StreamingCuration {
     // aggregation and the admission filter both consume it, and the
     // parse lineage re-executing per consumer would re-read the stream
     // source's batch twice per stage.
-    val featured = StreamingFunnel.withFeatures(clean, col(textCol),
-        cfg.minWords, cfg.maxWords, cfg.stopwords)
-      .localCheckpoint(true)
+    val featured = Pins.pin(StreamingFunnel.withFeatures(clean,
+      col(textCol), cfg.minWords, cfg.maxWords, cfg.stopwords))
     val rules = StreamingFunnel.rulesOver(col("__qf_g"), col("__qf_r"),
       cfg.minWords, cfg.maxWords, cfg.ngramMax)
     StreamingFunnel.failCounters(featured, cfg.minWords, cfg.maxWords,
@@ -123,9 +125,9 @@ object StreamingCuration {
     val admittedQ = cfg.nbModel match {
       case None => ruleAdmitted
       case Some(m) =>
-        val pred = graft.ops.NaiveBayes
-          .predict(ruleAdmitted, idCol, textCol, m)
-          .localCheckpoint(true) // two consumers: counts + admission
+        // pinned: two consumers, counts + admission
+        val pred = Pins.pin(graft.ops.NaiveBayes
+          .predict(ruleAdmitted, idCol, textCol, m))
         pred.groupBy(col("predicted")).agg(count(lit(1)).as("n"))
           .coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/nbfunnel/batch=$batchId")
@@ -235,7 +237,7 @@ object StreamingCuration {
     // memory bound is what this shape fixes. Decisions are pinned:
     // three consumers (decision log, state increment, admission
     // filter).
-    val dec = docs
+    val dec = Pins.pin(docs
       .repartition(col("stratum"))
       .sortWithinPartitions(col("stratum"), col("order_id"), col("tokens"))
       .mapPartitions { it =>
@@ -259,7 +261,7 @@ object StreamingCuration {
           }
         }
       }
-      .toDF().localCheckpoint(eager = true)
+      .toDF())
     // NO coalesce(1) here, unlike the funnel counters (|rules| rows)
     // and the state increments (|budgets| rows): the decision log
     // carries ONE ROW PER INPUT DOCUMENT, so a single writer would
@@ -272,10 +274,11 @@ object StreamingCuration {
       .groupBy(col("stratum")).agg(sum(col("tokens")).as("tokens"))
       .coalesce(1).write.mode("overwrite")
       .parquet(s"$stateDir/batch=$batchId")
-    val surviving = batch.join(broadcast(dec.where(col("admitted"))
+    // pinned: two consumers, curated + profile
+    val surviving = Pins.pin(batch.join(
+      broadcast(dec.where(col("admitted"))
         .select(col("order_id").as("__bg_id"))),
-      batch(idCol).cast("long") === col("__bg_id"), "left_semi")
-      .localCheckpoint(eager = true) // two consumers: curated + profile
+      batch(idCol).cast("long") === col("__bg_id"), "left_semi"))
     // the FINAL corpus output when budgets are configured: `admitted/`
     // is written at stage 3 (before this cut) and still carries
     // budget-rejected documents — a consumer reading it as the curated

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.core.Fs
+import graft.core.{Fs, Pins}
 import graft.ops.{Dedup, VectorOps}
 
 /** Online near-dup admission: a streaming document source is filtered so
@@ -59,8 +59,8 @@ object StreamingDedup {
                    admittedDir: String, n: Int = 3, k: Int = 32,
                    bands: Int = 8, minAgree: Int = 16): Seq[Long] = {
     val rowsPerBand = k / bands
-    val sigs = Dedup.minhashSignatures(batch, idCol, textCol, n, k)
-      .localCheckpoint(true) // reused: banding, internal pairs, scoring
+    // pinned: reused by banding, internal pairs, scoring
+    val sigs = Pins.pin(Dedup.minhashSignatures(batch, idCol, textCol, n, k))
     val bandRows = sigs
       .withColumn("bk", explode(
         Dedup.lshBandKeys(col("sig"), bands, rowsPerBand)))
@@ -85,8 +85,8 @@ object StreamingDedup {
         .where(col("batch") =!= batchId)
         .select(col("id").as("sid"), col("band"), col("key"),
           col("sig").as("ssig"))
-      val cand = bandRows.join(store, Seq("band", "key"))
-        .select(col("id"), col("sid")).distinct().localCheckpoint(true)
+      val cand = Pins.pin(bandRows.join(store, Seq("band", "key"))
+        .select(col("id"), col("sid")).distinct())
       // signature lookup restricted to candidate store docs FIRST, so
       // the dedup of the 8x band duplication shuffles candidate-many
       // rows, not the whole store (the store scan itself is per-batch
@@ -110,10 +110,9 @@ object StreamingDedup {
     // admitted derives from the BATCH ids, not the signature table: a
     // document shorter than one shingle has no signature and must be
     // admitted, not silently dropped
-    val admitted = batch.select(batch(idCol).cast("long").as("id"))
+    val admitted = Pins.pin(batch.select(batch(idCol).cast("long").as("id"))
       .distinct()
-      .join(rejected, Seq("id"), "left_anti")
-      .localCheckpoint(true)
+      .join(rejected, Seq("id"), "left_anti"))
 
     // ---- idempotent store increment + admitted output -----------------
     // band=<b> partition dirs under batch=<id>: replays overwrite, and
@@ -136,8 +135,9 @@ object StreamingDedup {
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(spark, batch, batchId, idCol, textCol, storeDir,
-          admittedDir, n, k, bands, minAgree)
+        // one scope per micro-batch: its pins die with it
+        Pins.scope(processBatch(spark, batch, batchId, idCol, textCol,
+          storeDir, admittedDir, n, k, bands, minAgree))
         ()
       }
       .start()

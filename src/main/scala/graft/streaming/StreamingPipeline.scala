@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import scala.jdk.CollectionConverters._
 
-import graft.core.{Calibration, Overlap}
+import graft.core.{Calibration, Overlap, Pins}
 import graft.pipeline.FramePipeline
 import graft.sinks.Sinks
 import graft.sources.FrameSource
@@ -28,7 +28,7 @@ import graft.sources.FrameSource
   * each Spark action costs a fixed planning and scheduling latency
   * however little it computes, and that latency, not pixel work, bounds
   * a batch. So every driver read rides the action that already
-  * materializes its table (`Pins.ckptWith`), and the batch runs as
+  * materializes its table (`Pins.pinWith`), and the batch runs as
   *
   *  1. the serial frame plan: decode + index, then
   *     [[FramePipeline.process]] (its size gates read their own pins);
@@ -39,7 +39,8 @@ import graft.sources.FrameSource
   *     starts at once and waits only for the pins it reads, each pin
   *     materialized once by whichever group needs it first;
   *
-  * then the A14 timing rows and the batch-level release of every pin.
+  * then the A14 timing rows. The batch is one [[Pins.scope]]: every pin
+  * it made is released when it exits.
   * Overlap changes when jobs run, never what any of them computes.
   */
 object StreamingPipeline {
@@ -98,7 +99,7 @@ object StreamingPipeline {
     * it; then per dataset the serial frame plan
     * ([[FramePipeline.process]]) and the pins-and-sinks graph on driver
     * threads ([[graft.core.Overlap]]). Every body finishes before the
-    * batch releases its pins. */
+    * batch's scope releases its pins. */
   def processBatch(batch: DataFrame, outDir: String, cal: Calibration,
                    geometry: DataFrame,
                    predef: Seq[graft.core.MaskShape] = Nil,
@@ -114,27 +115,23 @@ object StreamingPipeline {
         if (wait > 0) Thread.sleep(wait)
       }
     }
-    // Bounded executor storage across an unbounded stream: every
-    // localCheckpoint this batch pins (decode, the process() interiors,
-    // stats tables, csim state) is dead once its sinks committed. The
-    // ContextCleaner would reclaim them eventually, but only after a
-    // driver GC notices the weak references — under a large driver heap
-    // that lag spans many batches of pinned full-frame blocks and shows
-    // up as storage-eviction pressure. Releasing everything the batch
-    // pinned (and nothing that predates it — the per-calibration
-    // geometry checkpoint survives) keeps the steady-state footprint at
-    // exactly one batch.
-    val sc = batch.sparkSession.sparkContext
-    val preexisting = sc.getPersistentRDDs.keySet
-    try {
+    // Bounded executor storage across an unbounded stream: every pin
+    // this batch makes (decode, the process() interiors, stats tables,
+    // csim state) is dead once its sinks committed. The ContextCleaner
+    // would reclaim them eventually, but only after a driver GC notices
+    // the weak references — under a large driver heap that lag spans
+    // many batches of pinned full-frame blocks and shows up as
+    // storage-eviction pressure. The batch's scope releases exactly the
+    // pins made inside it (the per-calibration geometry checkpoint
+    // survives), which keeps the steady-state footprint at one batch.
+    Pins.scope {
       // One decode pass per batch: quarantine sentinel rows (y = -1
       // marks an undecodable payload — e.g. a file caught mid-write)
       // split off per dataset below; the checkpoint bounds memory at
       // maxFilesPerTrigger frames. The index aggregation is the action
       // that materializes it.
       val t0 = System.nanoTime()
-      val (pxAll, _, index) = graft.core.Pins.ckptWith(
-          FrameSource.toPixels(batch))(
+      val (pxAll, index) = Pins.pinWith(FrameSource.toPixels(batch))(
         _.groupBy(col("dataset"))
           .agg(max(col("y") < 0).as("bad"), max(col("y") >= 0).as("good"))
           .collect())
@@ -144,10 +141,7 @@ object StreamingPipeline {
           good = r.getBoolean(2), decodeS, outDir, cal, geometry, predef,
           corrections, referenceBinShift)
       }
-    } finally
-      sc.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!preexisting.contains(id)) rdd.unpersist(blocking = false)
-      }
+    }
   }
 
   /** Canonical parquet tables live under `outDir/tables/<name>`; the
@@ -207,15 +201,13 @@ object StreamingPipeline {
       // plan does not re-execute per sink. Only the columns the two pixel
       // sinks read — the full-width pixel table is ~3x this checkpoint's
       // footprint.
-      lazy val pixels = timed("process")(out.pixels
+      lazy val pixels = timed("process")(Pins.pin(out.pixels
         .select(col("frame_no"), col("y"), col("x"), col("corr"),
           col("base_mask"), col("is_outlier"), col("is_spot"),
-          col("is_arc"))
-        .localCheckpoint(true))
+          col("is_arc"))))
       // the frames with integral rows (every frame gets its stats CSVs)
       // come back from the pin's own materializing action
-      lazy val (integrals, _, frameNos) = graft.core.Pins.ckptWith(
-          out.integrals)(
+      lazy val (integrals, frameNos) = Pins.pinWith(out.integrals)(
         _.select(col("frame_no")).distinct().collect().map(_.getInt(0)).toSeq)
       // stats tables feed parquet + the reference's per-frame CSVs
       // (pipeline.py:491-492) — pin each so the plan runs once; the pins
@@ -225,8 +217,8 @@ object StreamingPipeline {
       // (FrameOutputs.qbinStats): materializing that one table runs the
       // pixel scan once where pinning gradStats and spottiness separately
       // re-ran it per family.
-      lazy val spotStats = out.spotStats.localCheckpoint(true)
-      lazy val qbinStats = out.qbinStats.localCheckpoint(true)
+      lazy val spotStats = Pins.pin(out.spotStats)
+      lazy val qbinStats = Pins.pin(out.qbinStats)
       lazy val stats = timed("stats")(
         Overlap.par(() => spotStats, () => qbinStats))
       def gradStats = FramePipeline.gradStatsOf(qbinStats)
@@ -328,22 +320,24 @@ object StreamingPipeline {
                                            ds: String): Unit = {
     val spark = vecs.sparkSession
     val statePath = s"$outDir/_state/csim/$ds"
+    // state frames re-delivered in this batch (shouldn't happen under
+    // exactly-once file semantics, but cheap to guard) lose to the
+    // batch's own copy: src 0 = state, 1 = batch (Csim.Gram)
+    val batchVecs = vecs.withColumn("src", lit(1))
+    def gramOf(state: DataFrame): graft.ops.Csim.Gram =
+      graft.ops.Csim.gram(state.withColumn("src", lit(0))
+        .unionByName(batchVecs))
     // state schema = the vectors' own (dataset, frame_no, y, x, v), so
     // the read needs no schema-inference job. Pinned LAZILY: the csim
     // pass reads every state partition and so materializes the pin, and
     // the overwrite below then reads the pinned copy, never the files it
     // replaces.
-    val state =
-      if (graft.core.Fs.exists(statePath, graft.core.Fs.conf(spark)))
-        Some(spark.read.schema(vecs.schema).parquet(statePath)
-          .localCheckpoint(eager = false))
-      else None
-    // state frames re-delivered in this batch (shouldn't happen under
-    // exactly-once file semantics, but cheap to guard) lose to the
-    // batch's own copy: src 0 = state, 1 = batch (Csim.Gram)
-    val batchVecs = vecs.withColumn("src", lit(1))
-    val gram = graft.ops.Csim.gram(state.fold(batchVecs)(
-      _.withColumn("src", lit(0)).unionByName(batchVecs)))
+    val (state, gram) =
+      if (graft.core.Fs.exists(statePath, graft.core.Fs.conf(spark))) {
+        val (pinned, g) = Pins.pinWith(spark.read.schema(vecs.schema)
+          .parquet(statePath))(gramOf)
+        (Some(pinned), g)
+      } else (None, graft.ops.Csim.gram(batchVecs))
     // A batch can contribute no vectors even when it had decodable files —
     // e.g. a shutter-closed frame whose every pixel is base-masked (all
     // non-positive). Skip csim for such a batch and leave state as-is

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.core.SyntheticFrame
+import graft.core.{Pins, SyntheticFrame}
 import graft.geometry.Geometry
 import graft.pipeline.FramePipeline
 
@@ -76,12 +76,12 @@ object ClusterSmoke {
     }
 
     val cal = SyntheticFrame.testCalibration(size)
-    val geo = t("geometry")(Geometry.build(spark, cal).localCheckpoint(true))
-    val px = t("frames")((1 to nFrames).map(no =>
+    val geo = t("geometry")(Pins.pin(Geometry.build(spark, cal)))
+    val px = t("frames")(Pins.pin((1 to nFrames).map(no =>
         SyntheticFrame.frame(spark, cal, no, nHotPer10k = 2,
           spots = Seq((size / 3, size / 3, 30000.0, 3.0)),
           arcs = Seq((5.5, 20.0, 160.0, 9000.0))))
-      .reduce(_ unionByName _).localCheckpoint(true))
+      .reduce(_ unionByName _)))
     println(s"[cluster] pixels = ${px.count()} on master $master")
 
     val out = t("process")(FramePipeline.process(px, geo, cal))

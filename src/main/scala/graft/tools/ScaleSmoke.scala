@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.core.SyntheticFrame
+import graft.core.{Pins, SyntheticFrame}
 import graft.geometry.Geometry
 import graft.pipeline.FramePipeline
 
@@ -60,13 +60,13 @@ object ScaleSmoke {
 
     val cal = SyntheticFrame.testCalibration(size)
     val geo = timed("geometry")(
-      Geometry.build(spark, cal).localCheckpoint(true))
+      Pins.pin(Geometry.build(spark, cal)))
     val frames = (1 to nFrames).map(no =>
       SyntheticFrame.frame(spark, cal, no, nHotPer10k = 2,
         spots = Seq((size / 3, size / 3, 30000.0, 3.0)),
         arcs = Seq((5.5, 20.0, 160.0, 9000.0))))
       .reduce(_ unionByName _)
-    val px = timed("frames")(frames.localCheckpoint(true))
+    val px = timed("frames")(Pins.pin(frames))
     println(s"SCALE_SMOKE pixels = ${px.count()} (${nFrames}x${size}x$size)")
 
     // process() eagerly materializes the flagged pixels and the
@@ -74,12 +74,11 @@ object ScaleSmoke {
     // per-frame work lands here
     val out = timed("process")(FramePipeline.process(px, geo, cal))
     val integrals = timed("integrate")(
-      out.integrals.localCheckpoint(true))
+      Pins.pin(out.integrals))
     println(s"SCALE_SMOKE integral rows = ${integrals.count()}")
-    val pixels = timed("pixel flags")(out.pixels
+    val pixels = timed("pixel flags")(Pins.pin(out.pixels
       .select(col("frame_no"), col("y"), col("x"),
-        col("base_mask"), col("is_outlier"), col("is_spot"), col("is_arc"))
-      .localCheckpoint(true))
+        col("base_mask"), col("is_outlier"), col("is_spot"), col("is_arc"))))
 
     val outDir = java.nio.file.Files
       .createTempDirectory("graft_smoke").toString

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-import graft.core.SyntheticFrame
+import graft.core.{Pins, SyntheticFrame}
 import graft.geometry.Geometry
 import graft.sources.FrameSource
 import graft.streaming.StreamingPipeline
@@ -64,7 +64,7 @@ object StreamSmoke {
     println(f"STREAM_SMOKE synth      ${(System.nanoTime() - t0) / 1e9}%8.2f s" +
       f" ($nFrames x $size x $size)")
 
-    val geo = Geometry.build(spark, cal).localCheckpoint(true)
+    val geo = Pins.pin(Geometry.build(spark, cal))
     val t1 = System.nanoTime()
     val q = StreamingPipeline.start(spark, inDir, outDir, cal, geo,
       availableNow = true, maxFilesPerTrigger = maxFiles)

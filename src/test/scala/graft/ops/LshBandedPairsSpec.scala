@@ -54,22 +54,26 @@ class LshBandedPairsSpec extends SparkSpec {
     assert(p2 == want, s"B=2 diverged from the reference OR semantics")
   }
 
-  test("pinned variant exposes the pair table's checkpoint pin for " +
-      "deterministic release (and B=1 pins nothing)") {
+  test("bands>1 returns the pair table pinned for Pins.release (and B=1 " +
+      "pins nothing)") {
     val sc = spark.sparkContext
     val (l, r) = (vecs(20, 0), vecs(20, 1))
-    val (pairs, ids) = VectorOps.lshBandedPairsPinned(
+    val pairs = VectorOps.lshBandedPairs(
       l, r, "vec_id", "v", dim = 16, planesPerBand = 4, bands = 2)
-    assert(ids.nonEmpty, "bands>1 must return the pair pin ids")
-    assert(ids.forall(sc.getPersistentRDDs.contains),
-      "returned ids must name live pins")
+    val pin = graft.core.Pins.rddOf(pairs)
+    assert(pin.nonEmpty, "bands>1 must return the pair table pinned")
+    assert(sc.getPersistentRDDs.contains(pin.get.id),
+      "the returned pin must be live")
     pairs.count() // consumable while pinned
-    graft.core.Pins.release(sc, ids)
-    assert(ids.forall(!sc.getPersistentRDDs.contains(_)),
-      "release must drop the exposed pins")
-    val (_, none) = VectorOps.lshBandedPairsPinned(
+    graft.core.Pins.release(pairs)
+    assert(!sc.getPersistentRDDs.contains(pin.get.id),
+      "release must drop the returned pin")
+    val before = sc.getPersistentRDDs.keySet
+    val one = VectorOps.lshBandedPairs(
       l, r, "vec_id", "v", dim = 16, planesPerBand = 4, bands = 1)
-    assert(none.isEmpty)
+    one.count()
+    assert(graft.core.Pins.rddOf(one).isEmpty &&
+      (sc.getPersistentRDDs.keySet -- before).isEmpty, "B=1 pinned")
   }
 
   test("guards: zero bands / key wider than a long are rejected") {

@@ -63,6 +63,9 @@ class StreamingCurationSpec extends SparkSpec {
     val lines = spark.readStream
       .schema(StructType(Seq(StructField("value", StringType))))
       .text(dir)
+    // a pin made before the stream, which no batch may release
+    val prePin = graft.core.Pins.pin(spark.range(4).toDF("k"))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     val q = StreamingCuration.start(spark, lines, schema, "doc_id",
       "text", out, ckpt, cfg)
     try {
@@ -71,6 +74,16 @@ class StreamingCurationSpec extends SparkSpec {
         java.nio.file.Paths.get(dir, "b1.jsonl"), b1.mkString("\n"))
       q.processAllAvailable()
     } finally q.stop()
+    // bounded executor storage: nothing a batch pinned survives it
+    // (unpersistRDD drops the registry entry synchronously), and the
+    // pre-stream pin is still registered and readable
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty,
+      s"curation batches leaked pinned RDDs: ${leaked.toSeq.sorted}")
+    assert(graft.core.Pins.rddOf(prePin).exists(r =>
+      spark.sparkContext.getPersistentRDDs.contains(r.id)) &&
+      prePin.count() == 4L, "a batch released a pre-stream pin")
+    graft.core.Pins.release(prePin)
 
     // ---- batch legs over the UNION of all input lines ----------------
     val allLines = (b0 ++ b1).toDF("raw")
