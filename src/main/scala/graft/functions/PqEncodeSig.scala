@@ -122,7 +122,7 @@ case class PqEncodeSig(child: Expression,
     // smaller code — remains the only decision procedure. Parity is
     // pinned by PqEncodeFormSpec plus the near-tie/duplicate-centroid
     // cases in PqEncodeSigFastPathSpec and a 20k-vector random sweep
-    // (PqEvalKernelBench: 0 mismatches).
+    // (OPTIMIZATION_r16: 0 mismatches).
     def bound(b: Double): Double =
       2.0 * (sd * 0.5e-9 + b * (1.12e-16 + sd * 2.23e-16))
     val bsum = new Array[Double](k)

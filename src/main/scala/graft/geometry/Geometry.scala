@@ -13,11 +13,14 @@ import graft.core.Calibration
   * cache_creation.py:21-54, Polarization GSASII_imports.py:558-579,
   * CacheCreator pipeline_queue.py:182-343).
   *
-  * Spark-first: one closed-form column-math job over `spark.range(ny*nx)`,
-  * persisted as Parquet, then broadcast- or bucket-joined to every frame.
-  * Nothing here is a UDF — the whole map computation runs inside
-  * whole-stage codegen, and at 100 TB the geometry table is written once
-  * per calibration hash and reused by every executor.
+  * Spark-first: the maps are closed-form Column math over (y, x)
+  * ([[attach]]), so the frame plan computes them inside its own pixel
+  * scan, and the fused stencil kernel through bit-identical scalar
+  * mirrors ([[scalarPixelGeoInto]], [[scalarPixelHatsInto]]); no per-frame
+  * join. Nothing here is a UDF — the whole map computation runs inside
+  * whole-stage codegen. The table form ([[build]], one job over
+  * `spark.range(ny*nx)`, optionally persisted per calibration hash)
+  * feeds the map sinks.
   *
   * Geometry convention (documented, unit-tested; the reference's exact
   * rotation-composition is vendored GSAS-II code we deliberately re-derive):
@@ -59,9 +62,9 @@ object Geometry {
     * with ZERO shuffle and no join. This is the hot path at scale: the
     * geometry "dimension" is a closed-form function of its join key, so
     * re-deriving ~30 doubles of trig per pixel (sub-µs) beats
-    * co-partitioning two 8M-row-per-frame tables on (y, x). The table
-    * form ([[build]]/[[saveBucketed]]) remains for explicit-join
-    * consumers and the UI's standing geometry queries. */
+    * co-partitioning two 8M-row-per-frame tables on (y, x); the frame
+    * plan takes this form. The table form ([[build]]) feeds the
+    * per-calibration map sinks (Sinks.writeMapTiffs). */
   def attach(df: DataFrame, cal: Calibration): DataFrame = {
     val (pxX, pxY) = (cal.pixelSize._1 / 1000.0, cal.pixelSize._2 / 1000.0)
     // Reference pose math (GetTthAzmG2 GSASII_imports.py:1023-1046, the
@@ -131,34 +134,6 @@ object Geometry {
       azimIn(azim, cal.lrAzimuth).as("in_azim_range"))
   }
 
-  /** Scalar mirror of the [[attach]] hat-field and q-bin expressions:
-    * a serializable (y, x) => (rhat_y, rhat_x, phat_y, phat_x, q_bin)
-    * closure over the calibration constants, for kernels that assemble
-    * tiles and would otherwise SHIP these four doubles + int per shuffled
-    * row (the tile exchange is encoder-bound, so shrinking the row from
-    * nine fields to four roughly halves its cost). Every arithmetic step
-    * matches the Column expressions' evaluation order, so values are
-    * bit-identical — asserted in GeometrySpec. Delegates to
-    * [[scalarPixelGeoFull]] so the mirror lives in exactly one place. */
-  def scalarPixelGeo(cal: Calibration)
-      : (Int, Int) => (Double, Double, Double, Double, Int) = {
-    val full = scalarPixelGeoFull(cal)
-    (y: Int, x: Int) => {
-      val g = full(y, x)
-      (g.rhatY, g.rhatX, g.phatY, g.phatX, g.qBin)
-    }
-  }
-
-  /** The per-pixel geometry values a fused stencil kernel re-derives
-    * in-task instead of shipping through (or joining after) the tile
-    * exchange — the [[attach]] columns the pipeline's pinned narrow
-    * projection carries, minus the correction factors (pol/dist_sq stay
-    * upstream: the corrected value itself crosses the exchange). */
-  final case class PixelGeo(
-      rhatY: Double, rhatX: Double, phatY: Double, phatX: Double,
-      qBin: Int, xMm: Double, yMm: Double, tthBin: Int, q: Double,
-      azim: Double, azimFlipped: Double)
-
   /** Scalar mirror of pmod(a, n) for doubles — the exact arithmetic of
     * Catalyst's Pmod (a % n, re-modded up by n when negative), so mirrored
     * azimuth values stay bit-identical to the Column form. */
@@ -167,20 +142,13 @@ object Geometry {
     if (r < 0) (r + n) % n else r
   }
 
-  /** Hat-field-only scalar mirror: (y, x) => (rhat_y, rhat_x), with
-    * phat = (-rhat_x, rhat_y) by construction. Pure arithmetic — no
-    * transcendentals — so tile kernels can fill their hat planes at a
-    * fraction of the full-geometry cost and reserve
-    * [[scalarPixelGeoFull]] for the interior pixels they actually emit.
-    * Bit-identical to the attach columns (same expression order). */
-  def scalarPixelHats(cal: Calibration): (Int, Int) => (Double, Double) = {
-    val into = scalarPixelHatsInto(cal)
-    val buf = new Array[Double](2)
-    (y: Int, x: Int) => { into(y, x, buf); (buf(0), buf(1)) }
-  }
-
-  /** Boxing-free form of [[scalarPixelHats]] — the one implementation of
-    * the hat arithmetic (the tuple form delegates here). */
+  /** Hat-field-only scalar mirror of [[attach]]: writes (rhat_y, rhat_x)
+    * for pixel (y, x), with phat = (-rhat_x, rhat_y) by construction.
+    * Pure arithmetic — no transcendentals — so tile kernels can fill
+    * their hat planes at a fraction of the full-geometry cost and reserve
+    * [[scalarPixelGeoInto]] for the interior pixels they actually emit.
+    * Bit-identical to the attach columns (same expression order,
+    * asserted in GeometrySpec). */
   def scalarPixelHatsInto(cal: Calibration): PixelHatsFn = {
     val (pxX, pxY) = (cal.pixelSize._1 / 1000.0, cal.pixelSize._2 / 1000.0)
     val (cx, cy) = cal.center
@@ -195,12 +163,15 @@ object Geometry {
     }
   }
 
-  /** Mutable [[PixelGeo]] for allocation-free kernel loops — filled in
-    * place by [[scalarPixelGeoInto]]. One holder per task replaces one
-    * PixelGeo case object per emitted pixel: the r15 JFR allocation
-    * profile charged ~5.6 GB/run of PixelGeo churn to the fused
-    * gradient kernel's emit path, the engine's single largest owned
-    * allocation site (SCALE_r15 §1). */
+  /** The per-pixel geometry values a fused stencil kernel re-derives
+    * in-task instead of shipping through (or joining after) the tile
+    * exchange — the [[attach]] columns the pipeline's pinned narrow
+    * projection carries, minus the correction factors (pol/dist_sq stay
+    * upstream: the corrected value itself crosses the exchange). Mutable,
+    * filled in place by [[scalarPixelGeoInto]]: one holder per task
+    * replaces one case object per emitted pixel (the r15 JFR allocation
+    * profile charged ~5.6 GB/run of that churn to the fused gradient
+    * kernel's emit path, SCALE_r15 §1). */
   final class PixelGeoHolder {
     var rhatY = 0.0; var rhatX = 0.0; var phatY = 0.0; var phatX = 0.0
     var qBin = 0; var xMm = 0.0; var yMm = 0.0; var tthBin = 0
@@ -227,8 +198,7 @@ object Geometry {
     * per-pixel geometry into a caller-owned [[PixelGeoHolder]]. THE one
     * implementation of the mirror arithmetic — every step in the Column
     * expressions' evaluation order so each field is bit-identical to
-    * the geometry table's (asserted in GeometrySpec via
-    * [[scalarPixelGeoFull]], which delegates here). Used by the fused
+    * the geometry table's (asserted in GeometrySpec). Used by the fused
     * narrow+gradient tile kernel
     * (Stencil.secondDirectionalDerivNarrowRaw) to emit the pipeline's
     * pinned projection straight from the stencil pass. */
@@ -276,19 +246,6 @@ object Geometry {
       out.tthBin = tthBin; out.q = q; out.azim = azim
       out.azimFlipped = pmodD(azim + 180.0, 360.0)
     } }
-  }
-
-  /** Allocating convenience form of [[scalarPixelGeoInto]]: (y, x) =>
-    * [[PixelGeo]]. Same single arithmetic implementation; kernels on the
-    * per-pixel hot path take the Into form and reuse one holder. */
-  def scalarPixelGeoFull(cal: Calibration): (Int, Int) => PixelGeo = {
-    val into = scalarPixelGeoInto(cal)
-    (y: Int, x: Int) => {
-      val g = new PixelGeoHolder
-      into(y, x, g)
-      PixelGeo(g.rhatY, g.rhatX, g.phatY, g.phatX, g.qBin, g.xMm, g.yMm,
-        g.tthBin, g.q, g.azim, g.azimFlipped)
-    }
   }
 
   /** Channel index, -1 for out-of-range (reference clamps to the discard
@@ -404,12 +361,11 @@ object Geometry {
       .map("%02x".format(_)).mkString.take(32)
   }
 
-  /** Persist the geometry table BUCKETED on (y, x): the per-frame
-    * pixel ⋈ geometry join (J1 — the hottest join in the engine) then
-    * reads the geometry side pre-partitioned, so only the incoming pixel
-    * batch shuffles and the geometry side never moves again across the
-    * life of a calibration. At 100 TB this converts the dominant join's
-    * exchange volume from (pixels + geometry) per batch to (pixels) only.
+  /** Persist the geometry table BUCKETED on (y, x): a consumer that
+    * joins pixels with the table (the J1 shape; the frame plan itself
+    * derives geometry inline) then reads the geometry side
+    * pre-partitioned, so only the incoming pixel batch shuffles and the
+    * geometry side never moves again across the life of a calibration.
     */
   def saveBucketed(spark: SparkSession, cal: Calibration, table: String,
                    buckets: Int = 32): Unit = {

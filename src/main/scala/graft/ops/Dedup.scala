@@ -450,7 +450,12 @@ object Dedup {
       case None => half.select(col("u").as("id"))
         .unionByName(half.select(col("v").as("id"))).distinct()
     }
-    var labels = Pins.pin(ids.withColumn("group_id", col("id")))
+    // the pin's materializing action also counts null node ids (one
+    // RDD job, like an eager pin): the RDD path re-attaches them below
+    val (labels0, nNull) = Pins.pinWith(
+      ids.withColumn("group_id", col("id")))(
+      _.queryExecution.toRdd.filter(_.isNullAt(0)).count())
+    var labels = labels0
 
     // Size-gated RDD fast path (guide §1.2 step 1 + §2.2). The
     // DataFrame loop below is latency-bound, not work-bound: each
@@ -531,24 +536,24 @@ object Dedup {
         s"connectedGroups did not converge in $maxIter iterations — " +
           "component diameter exceeds the near-dup regime this operator " +
           "targets; raise maxIter or use a star-contraction variant")
+      Pins.release(labels)
       // a null node id (possible only when the caller's pair/node
       // columns carry one — it is isolated by construction) re-attaches
-      // as the (null, null) row the DataFrame loop emits; resolve its
-      // presence ONCE (one tiny job over the pinned label table) so the
-      // identity-label checkpoint can be released instead of staying
-      // pinned for the session behind a per-consumption rescan
-      val nNull = labels.where(col("id").isNull).count()
-      Pins.release(labels)
-      val out = lab.toDF("id", "group_id")
-      return if (nNull == 0L) out
-      else out.unionByName(spark.createDataFrame(
-        java.util.Arrays.asList(
-          org.apache.spark.sql.Row(null, null)),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("group_id",
-            org.apache.spark.sql.types.LongType)))))
+      // as the (null, null) row the DataFrame loop emits. The result is
+      // returned as a pin, so Pins.release and a batch scope reach it;
+      // the loop's persisted RDD is dropped once the pin holds the rows
+      val labDf = lab.toDF("id", "group_id")
+      val out = Pins.pin(if (nNull == 0L) labDf
+        else labDf.unionByName(spark.createDataFrame(
+          java.util.Arrays.asList(
+            org.apache.spark.sql.Row(null, null)),
+          org.apache.spark.sql.types.StructType(Seq(
+            org.apache.spark.sql.types.StructField("id",
+              org.apache.spark.sql.types.LongType),
+            org.apache.spark.sql.types.StructField("group_id",
+              org.apache.spark.sql.types.LongType))))))
+      lab.unpersist(blocking = false)
+      return out
     }
 
     // one propagation step: neighborhood min, then the pointer jump —

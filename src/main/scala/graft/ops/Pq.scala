@@ -214,7 +214,7 @@ object Pq {
     * (broadcast-join + argmin window — an exchange of S × |corpus|
     * rows) stays as the in-repo oracle, bit-equality pinned by
     * PqEncodeFormSpec. Output identical: (id, codes). Measured
-    * (PqFormBench, interleaved, 1× and 10× ScaleGen corpora): the
+    * (SCALE_r08, interleaved, 1× and 10× ScaleGen corpora): the
     * expression runs at 0.38–0.55× the relational form's wall time AND
     * deletes the exchange. One known cost: under projection collapse a
     * downstream explode's pushed null/size filter re-evaluates the

@@ -1,11 +1,11 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.Pins
-import graft.ops.RobustStats
-import graft.stencil.{CCL, Stencil}
+import graft.core.{Calibration, Pins}
+import graft.geometry.Geometry
+import graft.stencil.CCL
 
 /** The spot/texture classification pipeline (reference
   * `current_splitting_method` classification.py:829-912) — the centerpiece
@@ -72,9 +72,9 @@ object Classification {
         .otherwise(lit(0)))
   }
 
-  /** C3 — gradient refinement of arc candidates. `allPx` is the FULL frame
-    * pixel table (frame_no, y, x, q, azim, azim_flipped, rhat_y, rhat_x,
-    * phat_y, phat_x, corr); `labeled` the outlier clusters with
+  /** C3 — gradient refinement of arc candidates. `d2Field` is the FULL
+    * frame's second-radial-derivative field (keys..., y, x, grad2_r, any
+    * further columns ignored); `labeled` the outlier clusters with
     * `classifier` from [[shapeClassify]]. Returns per-pixel final flags
     * (frame_no, y, x, label, is_spot, is_arc).
     *
@@ -97,27 +97,24 @@ object Classification {
     * (the common frame), the whole wedge stage — azimuthal-gradient CCL
     * included — is skipped outright.
     *
-    * `labeledRows = Some(n)` (both classify paths) asserts `labeled` is
-    * built narrowly on a pinned table and has `n` rows — the caller read
-    * the count off that pin's own materializing action — so the
-    * redundant re-pin AND its count are skipped; the broadcast size gate
-    * runs either way. Without it `labeled` is pinned here and the count
-    * is that pin's action. Both are by-name and evaluated once, on the
-    * driver thread that builds the labeled side (see the overlap below),
-    * so a caller may hand in its cluster labeling still unevaluated.
+    * `labeled` must be built narrowly on a pinned table with
+    * `labeledRows` rows — the caller reads the count off that pin's own
+    * materializing action, so no re-pin is needed here; the broadcast
+    * size gate still runs on it. Both are by-name and evaluated once, on
+    * the driver thread that builds the labeled side (see the overlap
+    * below), so a caller may hand in its cluster labeling still
+    * unevaluated.
     *
     * `labeled` must carry ONE classifier value per (keys, label) — the
     * shape [[shapeClassify]] produces (its output is per-label and
     * joined back on the label key). The wedge-stage routing reads
     * classifier evidence off the central-band rows, which is equivalent
     * to the any-pixel test exactly under that invariant. */
-  def gradientRefine(allPx: DataFrame, labeled: => DataFrame, width: Int,
-                     height: Int, keys: Seq[String],
-                     p: Params = Params(),
-                     d2Precomputed: Option[DataFrame] = None,
-                     labeledRows: => Option[Long] = None): DataFrame = {
+  def gradientRefine(d2Field: DataFrame, labeled: => DataFrame,
+                     labeledRows: => Long, width: Int, height: Int,
+                     keys: Seq[String], p: Params = Params()): DataFrame = {
     val kcols = keys.map(col)
-    val spark = allPx.sparkSession
+    val spark = d2Field.sparkSession
 
     // collect-route: pin a tiny per-cluster table as a LocalRelation so
     // downstream broadcasts are free of lineage re-execution; the rows
@@ -130,32 +127,20 @@ object Classification {
     }
     def localized(df: DataFrame): DataFrame = collectLocal(df)._2
 
-    // ---- 2nd directional (radial) derivative over the dense frame -----
-    // (or the caller's pre-materialized field — FramePipeline.process
-    // computes the radial and azimuthal d2 in ONE fused tile pass)
-    val d2 = d2Precomputed
-      .map(_.select(kcols ++ Seq(col("y"), col("x"), col("grad2_r")): _*))
-      .getOrElse( // pinned: feeds the threshold, on_arc, wedge stages
-        Pins.pin(secondDirectionalDeriv(allPx, width, height, keys,
-          "rhat_y", "rhat_x").withColumnRenamed("grad2", "grad2_r")))
+    // FramePipeline.process computes the radial and azimuthal d2 in ONE
+    // fused tile pass; only the radial field is read here
+    val d2 = d2Field.select(kcols ++ Seq(col("y"), col("x"),
+      col("grad2_r")): _*)
 
     // ---- A5: per-cluster central-band percentile vs global threshold --
     // d2 is the full frame; the labeled cluster side broadcasts so the
-    // frame never shuffles. labeledRows skips the REDUNDANT re-pin (the
-    // classify paths hand in a table built on their own checkpoint) but
-    // NOT the size gate: a pathological dense mask (a threshold
-    // selecting half the frame) makes the closed-cluster table
-    // frame-sized, and a blind broadcast there would OOM the driver
-    // where the gated form degrades to a shuffle join.
+    // frame never shuffles — unless a pathological dense mask (a
+    // threshold selecting half the frame) makes the closed-cluster table
+    // frame-sized: a blind broadcast there would OOM the driver, where the
+    // gated form degrades to a shuffle join.
     lazy val withG = {
-      val (labeledPinned, labeledN) = labeledRows match {
-        case Some(n) => (labeled, n)
-        case None =>
-          val (pinned, n) = Pins.pinWith(labeled)(_.count())
-          (pinned, n)
-      }
-      val labHint = if (labeledN <= 1000000L)
-        broadcast(labeledPinned) else labeledPinned
+      val labHint = if (labeledRows <= 1000000L)
+        broadcast(labeled) else labeled
       Pins.pin(d2.join(labHint, keys :+ "y" :+ "x"))
     }
     // distributed rank-selection percentile: the gather-and-sort
@@ -290,34 +275,13 @@ object Classification {
     }
   }
 
-  /** Second directional derivative of `corr` along the (hatY, hatX) unit
-    * vector field: two FUSED stencil passes (derivative + hat projection
-    * inside the tile kernel, hats carried through —
-    * [[Stencil.directionalDeriv]]), matching the reference
-    * radial_and_azim_gradient applied twice (classification.py:474-496).
-    * Returns (keys..., y, x, grad2). Join-free: the previous
-    * convolve-then-join form sort-merged the full pixel table four
-    * times. */
-  def secondDirectionalDeriv(allPx: DataFrame, width: Int, height: Int,
-                             keys: Seq[String], hatY: String,
-                             hatX: String): DataFrame = {
-    require(keys == Seq("frame_no"),
-      "directional derivatives support the frame_no key")
-    val in = allPx.select(col("frame_no"), col("y"), col("x"),
-      col("corr").as("v"), col(hatY).as("hy"), col(hatX).as("hx"))
-    val d1 = Stencil.directionalDeriv(in, width, height)
-    Stencil.directionalDeriv(d1, width, height)
-      .select(col("frame_no"), col("y"), col("x"), col("v").as("grad2"))
-  }
-
   /** C1 — full composition: outlier pixel set → closing → CCL → shape
     * classifier → gradient refinement. `framePx` must carry (keys..., y,
-    * x, q, azim, azim_flipped, rhat_y, rhat_x, corr) for all pixels and an
-    * `is_outlier` flag. */
-  def classify(framePx: DataFrame, width: Int, height: Int,
-               keys: Seq[String], p: Params = Params(),
-               d2Precomputed: Option[DataFrame] = None,
-               cal: Option[graft.core.Calibration] = None): DataFrame = {
+    * x) for all pixels and an `is_outlier` flag; `d2` is the frame's
+    * second-radial-derivative field (see [[gradientRefine]]). */
+  def classify(framePx: DataFrame, d2: DataFrame, cal: Calibration,
+               width: Int, height: Int, keys: Seq[String],
+               p: Params = Params()): DataFrame = {
     val outlierPx = framePx.where(col("is_outlier"))
       .select(keys.map(col) ++ Seq(col("y"), col("x")): _*)
     // fused closing + CCL: one shuffle serves both (CCL.closeAndLabel);
@@ -326,41 +290,23 @@ object Classification {
     lazy val closed = CCL.closeAndLabel(outlierPx, 1, width, height, keys)
     // closing can add pixels outside the original outlier set; the
     // cluster stats need q/azim/azim_flipped for every CLOSED pixel.
-    // With a calibration in hand those are a closed-form function of
-    // (y, x) (Geometry.attach — bit-identical to both the geometry
-    // table and the fused kernel's scalar mirror, and closing clips to
-    // frame bounds so membership matches the join), computed directly
-    // on the TINY cluster table; the join form re-scanned the 33M-row
-    // frame to decorate ~1e3 rows (measured ~4 s/batch warm) and is
-    // kept for callers without a calibration. Either way the decorated
-    // table is pinned (reused by shape stats + refinement) and its row
-    // count — the refinement's broadcast gate — is the pin's action.
-    lazy val (labeled, labeledN) = Pins.pinWith(cal match {
-      case Some(c) =>
-        graft.geometry.Geometry.attach(closed, c)
-          .select(keys.map(col) ++ Seq(col("y"), col("x"), col("q"),
-            col("azim"), col("azim_flipped"), col("label")): _*)
-      case None =>
-        // count-gated broadcast: the full frame table never shuffles
-        val (labeled0, n0) = Pins.pinWith(closed)(_.count())
-        val lab0 = if (n0 <= 1000000L) broadcast(labeled0) else labeled0
-        framePx.select(keys.map(col) ++
-            Seq(col("y"), col("x"), col("q"), col("azim"),
-              col("azim_flipped")): _*)
-          .join(lab0, keys :+ "y" :+ "x")
-    })(_.count())
+    // Those are a closed-form function of (y, x) (Geometry.attach —
+    // bit-identical to the fused kernel's scalar mirror), computed
+    // directly on the TINY cluster table instead of re-scanning the
+    // 33M-row frame to decorate ~1e3 rows. The decorated table is pinned
+    // (reused by shape stats + refinement) and its row count — the
+    // refinement's broadcast gate — is the pin's action.
+    lazy val (labeled, labeledN) = Pins.pinWith(
+      Geometry.attach(closed, cal)
+        .select(keys.map(col) ++ Seq(col("y"), col("x"), col("q"),
+          col("azim"), col("azim_flipped"), col("label")): _*))(_.count())
     // one shape row per (keys, label) of `labeled`: the inner join keeps
-    // every labeled row, so labeledFull has exactly labeledN rows
+    // every labeled row, so labeledFull has exactly labeledN rows and
+    // recomputes as a narrow broadcast-join over the checkpoint.
+    // Everything from the closing on is lazy: gradientRefine runs it
+    // alongside its global-threshold percentile.
     lazy val labeledFull = labeled.join(
       broadcast(shapeClassify(labeled, keys, p)), keys :+ "label")
-    // BOTH branches pin `labeled` above, so labeledFull recomputes as a
-    // narrow broadcast-join over a checkpointed table in either path —
-    // gradientRefine skips its redundant re-checkpoint and count (one
-    // scheduler round-trip per batch, and a second run of the shape
-    // join); the broadcast size gate still runs — see gradientRefine's
-    // doc. Everything from the closing on is lazy: gradientRefine runs
-    // it alongside its global-threshold percentile.
-    gradientRefine(framePx, labeledFull, width, height, keys, p,
-      d2Precomputed, labeledRows = Some(labeledN))
+    gradientRefine(d2, labeledFull, labeledN, width, height, keys, p)
   }
 }

@@ -9,17 +9,20 @@ import graft.ops.{Corrections, Histogram, RobustStats}
 
 /** The per-frame analytics plan (SURVEY §3.2) as one DataFrame lineage:
   *
-  *   pixels ⋈ geometry → corrections → base mask → per-ring robust outlier
-  *   mask → closing → CCL → shape + gradient classification → four masked
-  *   azimuthal integrations (one shuffle) → per-spot / per-Q-bin stats.
+  *   pixels → corrections → inline geometry → base mask → per-ring
+  *   robust outlier mask → closing → CCL → shape + gradient
+  *   classification → four masked azimuthal integrations (one shuffle) →
+  *   per-spot / per-Q-bin stats.
   *
   * Reference: run_iteration pipeline.py:78-567. Catalyst fuses the
   * elementwise stages into generated code; shuffles appear only at the
   * grouped aggregations, CCL, and the stencil tile exchange. The geometry
-  * side is produced once per calibration (Geometry.buildCached) and joined
-  * per frame; many frames flow through the SAME plan concurrently, keyed by
-  * frame_no — the parallelism the reference's serialized queue leaves on
-  * the table (pipeline_queue.py:745-746).
+  * columns are a closed-form function of (y, x) and the calibration, so
+  * they are computed inside the plan ([[Geometry.attach]] in the pixel
+  * scan, the scalar mirror in the fused stencil kernel) rather than joined
+  * per frame; many frames flow through the SAME plan concurrently, keyed
+  * by frame_no — the parallelism the reference's serialized queue leaves
+  * on the table (pipeline_queue.py:745-746).
   */
 object FramePipeline {
 
@@ -110,7 +113,9 @@ object FramePipeline {
     graft.core.MaskShape.combined(predef) ||
       intensity <= 0 || !col("in_azim_range") || !col("in_tth_range")
 
-  /** Join pixels with geometry and flag base-mask + ring outliers (A1).
+  /** Flag base-mask + ring outliers (A1). The geometry columns are
+    * computed inside the pixel scan's codegen ([[Geometry.attach]]), not
+    * joined from a persisted table, so the frame never shuffles on (y, x).
     * The correction bundle (P4/S10) applies to the RAW intensity before
     * anything else, exactly like the reference corrects the image on
     * load (pipeline.py:135-146) — so the non-positive mask, ring
@@ -118,36 +123,13 @@ object FramePipeline {
     * `corr_i` carries the flat-corrected raw value (the reference's
     * `_flatfield_correct.tif` content); `corr` adds the geometric
     * polarization/solid-angle factors on top. */
-  def flagOutliers(pixels: DataFrame, geometry: DataFrame,
+  def flagOutliers(pixels: DataFrame, cal: Calibration,
                    esdMul: Double = 3.0,
                    predef: Seq[graft.core.MaskShape] = Nil,
                    corrections: Corrections.Frames = Corrections.Frames(),
-                   maxBroadcastStatsRows: Long = 1000000L): DataFrame =
-    flagOutliersOn(
-      Corrections.applyFrames(pixels, corrections).join(geometry,
-        Seq("y", "x")),
-      esdMul, predef, maxBroadcastStatsRows)
-
-  /** Inline-geometry variant: the geometry columns are computed inside
-    * the pixel scan's codegen ([[Geometry.attach]] — bit-identical
-    * expressions) instead of joined from the persisted table, removing
-    * the two-sided (y, x) shuffle entirely. This is the default path in
-    * [[process]]; the join form above remains for explicit-join
-    * consumers (J1) and is asserted result-identical in PipelineSpec. */
-  def flagOutliersInline(pixels: DataFrame, cal: Calibration,
-                         esdMul: Double = 3.0,
-                         predef: Seq[graft.core.MaskShape] = Nil,
-                         corrections: Corrections.Frames =
-                           Corrections.Frames(),
-                         maxBroadcastStatsRows: Long = 1000000L): DataFrame =
-    flagOutliersOn(
-      Geometry.attach(Corrections.applyFrames(pixels, corrections), cal),
-      esdMul, predef, maxBroadcastStatsRows)
-
-  private def flagOutliersOn(pixGeo: DataFrame, esdMul: Double,
-                             predef: Seq[graft.core.MaskShape],
-                             maxBroadcastStatsRows: Long): DataFrame = {
-    val px = pixGeo
+                   maxBroadcastStatsRows: Long = 1000000L): DataFrame = {
+    val px = Geometry.attach(
+        Corrections.applyFrames(pixels, corrections), cal)
       .withColumn("corr", corrected(col("corr_i")))
       .withColumn("base_mask", baseMask(col("corr_i"), predef))
     val live = px.where(!col("base_mask"))
@@ -175,24 +157,20 @@ object FramePipeline {
       .drop("med", "mad", "n")
   }
 
-  /** Full plan over a (frame_no, y, x, intensity) pixel table.
-    * `inlineGeometry = true` (default) computes the geometry columns
-    * inside the pixel scan instead of joining `geometry` — same values,
-    * no (y, x) shuffle; pass false to exercise the explicit join path. */
+  /** Full plan over a (frame_no, y, x, intensity) pixel table. The
+    * geometry columns are derived from `cal` inside the plan (in the
+    * pixel scan and in the fused stencil kernel); `geometry` is not read
+    * and stays only for existing callers of this signature. */
   def process(pixels: DataFrame, geometry: DataFrame, cal: Calibration,
               esdMul: Double = 3.0,
               params: Classification.Params = Classification.Params(),
               predef: Seq[graft.core.MaskShape] = Nil,
               referenceBinShift: Boolean = false,
-              corrections: Corrections.Frames = Corrections.Frames(),
-              inlineGeometry: Boolean = true)
+              corrections: Corrections.Frames = Corrections.Frames())
       : FrameOutputs = {
     val (h, w) = cal.imageSize
     val keys = Seq("frame_no")
-    val flagged0 =
-      if (inlineGeometry)
-        flagOutliersInline(pixels, cal, esdMul, predef, corrections)
-      else flagOutliers(pixels, geometry, esdMul, predef, corrections)
+    val flagged0 = flagOutliers(pixels, cal, esdMul, predef, corrections)
     // M6 (reference classification.py:466-468): replace PREDEF-masked
     // pixels' corrected value with the Gaussian interpolation of their
     // valid neighbourhood BEFORE the gradient stages. The reference
@@ -212,64 +190,34 @@ object FramePipeline {
     } else flagged0
     // Materialize once: every downstream stage (classification, four
     // integrals, grad stats, spottiness) re-reads this table; without a
-    // persist the scan+join+ring-stats lineage would re-execute per
-    // branch. On the inline path the checkpoint holds ONLY the seven
-    // columns that cannot be recomputed from (y, x); the fused stencil
-    // pass below re-derives the geometry columns in-kernel and emits the
-    // narrow projection AND both gradients from its single exchange, so
-    // the batch carries exactly TWO full-frame materializations (core +
-    // fused) where the chained form carried three (core, gradients,
-    // narrow — the third was a 33M-row job of its own, SCALE_r05's named
-    // lever). The join path keeps the materialized geometry columns —
-    // recomputing them there would mean re-running the join.
+    // persist the scan+ring-stats lineage would re-execute per branch.
+    // The checkpoint holds ONLY the seven columns that cannot be
+    // recomputed from (y, x); the fused stencil pass below re-derives the
+    // geometry columns in-kernel and emits the narrow projection AND both
+    // gradients from its single exchange, so the batch carries exactly
+    // TWO full-frame materializations (core + fused) where the chained
+    // form carried three (core, gradients, narrow — the third was a
+    // 33M-row job of its own, SCALE_r05's named lever).
     //
     // Plan-shape rule (measured 25x, SCALE_r03, PlanInvariantsSpec): the
     // deep geometry trig must never share a codegen stage with the
-    // downstream joins. On the fused path the trig runs as plain JVM code
-    // inside the tile kernel and downstream stages read the fused
-    // CHECKPOINT, so the rule holds with one materialization fewer.
-    val (narrow, gradBoth) = if (inlineGeometry) {
-      val core = Pins.pin(flaggedI.select(col("frame_no"), col("y"),
-        col("x"), col("corr_i"), col("corr"), col("base_mask"),
-        col("is_outlier")))
-      val fused = Pins.pin(
-        graft.stencil.Stencil.secondDirectionalDerivNarrowRaw(
-          core, w, h, Geometry.scalarPixelGeoInto(cal),
-          Geometry.scalarPixelHatsInto(cal), tile = 512))
-      // the kernel's packed key widens frame_no to long; restore the
-      // input's type so downstream output schemas are unchanged
-      val fno = pixels.schema("frame_no").dataType
-      // narrow keeps grad2_a: the shared A8+A9 aggregate below reads it
-      // off the same checkpoint — zero extra materialization
-      (fused.drop("grad2_r")
-         .withColumn("frame_no", col("frame_no").cast(fno)),
-       fused.select(col("frame_no"), col("y"), col("x"),
-         col("grad2_r"), col("grad2_a"), col("q_bin")))
-    } else {
-      val flagged = Pins.pin(flaggedI.drop("pol", "dist_sq",
-        "in_tth_range", "in_azim_range", "azim_band"))
-      // Both second directional derivatives (radial for classification,
-      // azimuthal for the A8 gradient stats) in ONE fused tile pass with
-      // q_bin carried through. Only (key, y, x, corr) crosses the
-      // exchange; hats and q_bin are recomputed in-kernel from the
-      // scalar geometry mirror.
-      val gb = Pins.pin(graft.stencil.Stencil.secondDirectionalDerivGeoRaw(
-          flagged.select(col("frame_no"), col("y"), col("x"),
-            col("corr").as("v")),
-          w, h, Geometry.scalarPixelGeo(cal), tile = 512))
-      val nr = Pins.pin(flagged.select(col("frame_no"), col("y"), col("x"),
-          col("x_mm"), col("y_mm"), col("corr_i"), col("corr"),
-          col("base_mask"), col("is_outlier"), col("tth_bin"),
-          col("q_bin"), col("q"), col("azim"), col("azim_flipped")))
-      // the shared A8+A9 aggregate reads grad2_a alongside the narrow
-      // columns; on this (non-default, spec-pinned) path that takes an
-      // explicit 1:1 join of the two checkpoints — the fused path gets
-      // the column for free
-      val fno = pixels.schema("frame_no").dataType
-      (nr.join(gb.select(col("frame_no").cast(fno).as("frame_no"),
-          col("y"), col("x"), col("grad2_a")), Seq("frame_no", "y", "x")),
-       gb)
-    }
+    // downstream joins. The trig runs as plain JVM code inside the tile
+    // kernel and downstream stages read the fused CHECKPOINT, so the rule
+    // holds with one materialization fewer.
+    val core = Pins.pin(flaggedI.select(col("frame_no"), col("y"),
+      col("x"), col("corr_i"), col("corr"), col("base_mask"),
+      col("is_outlier")))
+    val fused = Pins.pin(
+      graft.stencil.Stencil.secondDirectionalDerivNarrowRaw(
+        core, w, h, Geometry.scalarPixelGeoInto(cal),
+        Geometry.scalarPixelHatsInto(cal), tile = 512))
+    // the kernel's packed key widens frame_no to long; restore the
+    // input's type so downstream output schemas are unchanged
+    val fno = pixels.schema("frame_no").dataType
+    // narrow keeps grad2_a: the shared A8+A9 aggregate below reads it
+    // off the same checkpoint — zero extra materialization
+    val narrow = fused.drop("grad2_r")
+      .withColumn("frame_no", col("frame_no").cast(fno))
 
     // C1-C3: spot/arc classification of outlier clusters. Pinned: the
     // classification tail (gradient refinement joins) otherwise
@@ -277,12 +225,11 @@ object FramePipeline {
     // (integrals, spot stats, spottiness, pixel sink) — measured 3x the
     // work at production frame sizes. The table is outlier-pixels-only,
     // so the checkpoint is tiny relative to the frame. classify reads
-    // the narrow checkpoint (it needs q/azim/azim_flipped, all there);
-    // passing cal lets it derive cluster geometry closed-form instead of
-    // re-scanning that checkpoint for the label join.
+    // the narrow checkpoint (it needs q/azim/azim_flipped, all there)
+    // and derives cluster geometry closed-form from cal.
     val (flags, flagRows) = Pins.pinWith(
-      Classification.classify(narrow, w, h, keys, params,
-        d2Precomputed = Some(gradBoth), cal = Some(cal)))(_.count())
+      Classification.classify(narrow, fused, cal, w, h, keys,
+        params))(_.count())
     // flag rows are outlier-cluster pixels — orders of magnitude smaller
     // than the frame. Without the hint Catalyst plans a sort-merge that
     // shuffles the 33M-row fact side; count-gate it like flagOutliers so

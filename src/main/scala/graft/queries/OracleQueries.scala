@@ -6321,20 +6321,9 @@ object OracleQueries {
     "text_bigram_logprob", "text_extract",
     "text_redact", "warc_charset")
 
-  /** Conf-listed additions to [[FanoutQueries]]
-    * (`spark.graft.scan.fanoutExtra`, comma-separated query names) — the
-    * measurement hook that lets the interleaved FanoutAB probe A/B a
-    * non-whitelisted row without a code edit. Not a tuning surface:
-    * wins measured through it get promoted into the static list. */
-  private def fanoutExtra(s: SparkSession): Set[String] =
-    s.conf.getOption("spark.graft.scan.fanoutExtra")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty)
-
   val queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map(q => q.name -> { (s: SparkSession, dir: String) =>
-      fanoutEnabled.withValue(FanoutQueries.contains(q.name) ||
-        fanoutExtra(s).contains(q.name)) {
+      fanoutEnabled.withValue(FanoutQueries.contains(q.name)) {
         q.fn(s, dir)
       }
     }).toMap

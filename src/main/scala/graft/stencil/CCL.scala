@@ -38,8 +38,9 @@ import graft.core.Pins
   */
 object CCL {
 
-  /** Broadcast cap for the label-mapping join-back, mirroring
-    * FramePipeline.flagOutliers: mapping rows scale with active pixels ×
+  /** Broadcast cap for the label-mapping join-back, mirroring the
+    * ring-stats cap of FramePipeline.flagOutliers (`maxBroadcastStatsRows`,
+    * the same 1M rows): mapping rows scale with active pixels ×
     * frames-per-batch, so a 10k-frame backfill batch must not broadcast
     * them through the driver. */
   val MaxBroadcastMappingRows: Long = 1000000L

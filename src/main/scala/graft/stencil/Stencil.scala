@@ -1,6 +1,6 @@
 package graft.stencil
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dense tile-stencil execution: partition the pixel table into square
@@ -30,12 +30,6 @@ object Stencil {
     require(height <= tile * 4096 && width <= tile * 4096,
       s"packed tile key holds 12 bits per tile axis: image ${width}x" +
         s"$height exceeds $tile*4096 tiles per side; raise `tile`")
-
-  private def checkFrameNo(f: Long): Long =
-    if (f < 0 || f >= MaxPackedFrame)
-      throw new IllegalArgumentException(
-        s"frame_no $f outside the packed-tile-key range [0, 2^39)")
-    else f
 
   /** Run `kernel` over dense (tile+2*halo)^2 arrays assembled per tile.
     * `kernel(buf, w, h)` returns the transformed buffer (same shape,
@@ -127,7 +121,9 @@ object Stencil {
     * to the reference's radial/azimuthal directional gradients
     * (classification.py:46-63): grad_r = d . r_hat, grad_phi = d . phi_hat
     * with the unit vectors as geometry columns, applied relationally by
-    * the caller. */
+    * the caller. This join-based form is the readable reference for the
+    * fused [[secondDirectionalDerivNarrowRaw]] kernel (asserted
+    * bit-identical in DirectionalDerivSpec). */
   def derivatives(px: DataFrame, width: Int, height: Int,
                   tile: Int = 256): DataFrame = {
     val dy = convolve2d(px, width, height, dyKernel, tile)
@@ -137,528 +133,36 @@ object Stencil {
     dy.join(dx, Seq("frame_no", "y", "x"))
   }
 
-  /** Fused directional derivative: ONE tile pass computes
-    * g = 0.5*(v[y+1]-v[y-1])*hy + 0.5*(v[x+1]-v[x-1])*hx per pixel, with
-    * the (hy, hx) unit-vector field carried through the tiles as two
-    * extra planes. Identical math to `derivatives` + a join against the
-    * hat columns, but with ZERO joins and one tile assembly instead of
-    * two — at production frame sizes the join-based form spent most of
-    * its time sort-merging 16M-row tables. Output carries (v=g, hy, hx)
-    * so passes CHAIN without re-joining the hats (the second directional
-    * derivative is just another call).
+  /** Second directional derivatives along BOTH hat fields (radial for
+    * classification, azimuthal for the A8 gradient stats) fused with the
+    * pipeline's pinned narrow projection in ONE tile pass — the
+    * per-frame plan's only derivative kernel. Per field the math is the
+    * reference's radial_and_azim_gradient applied twice
+    * (classification.py:46-63, 474-496): g1 = 0.5*(v[y+1]-v[y-1])*hy +
+    * 0.5*(v[x+1]-v[x-1])*hx, then the same stencil over g1. A halo of 2
+    * lets the first derivative be computed tile-locally into the halo-1
+    * ring (zero outside the frame, as a zero-filled convolution gives),
+    * then differentiated again for the tile interior; the result equals
+    * the [[derivatives]] + hat-join formulation run twice, bit for bit
+    * (DirectionalDerivSpec).
     *
-    * Input/output schema: (frame_no, y, x, v, hy, hx). */
-  def directionalDeriv(px: DataFrame, width: Int, height: Int,
-                       tile: Int = 256): DataFrame = {
-    val spark = px.sparkSession
-    import spark.implicits._
-    val halo = 1
-    val side = tile + 2 * halo
-
-    val typed = px.select(col("frame_no").cast("long"), col("y").cast("int"),
-      col("x").cast("int"), col("v").cast("double"),
-      col("hy").cast("double"), col("hx").cast("double"))
-      .as[(Long, Int, Int, Double, Double, Double)]
-
-    typed.flatMap { case (f, y, x, v, hy, hx) =>
-      val tys = ((y - halo) / tile) to ((y + halo) / tile)
-      val txs = ((x - halo) / tile) to ((x + halo) / tile)
-      for {
-        ty <- tys if ty >= 0 && ty * tile < height
-        tx <- txs if tx >= 0 && tx * tile < width
-      } yield ((f, ty, tx), (y, x, v, hy, hx))
-    }
-    .groupByKey(_._1)
-    .flatMapGroups { (key: (Long, Int, Int), it) =>
-      val (f, ty, tx) = key
-      val vbuf = new Array[Double](side * side)
-      val hybuf = new Array[Double](side * side)
-      val hxbuf = new Array[Double](side * side)
-      val y0 = ty * tile - halo; val x0 = tx * tile - halo
-      it.foreach { case (_, (y, x, v, hy, hx)) =>
-        val ly = y - y0; val lx = x - x0
-        if (ly >= 0 && ly < side && lx >= 0 && lx < side) {
-          val i = ly * side + lx
-          vbuf(i) = v; hybuf(i) = hy; hxbuf(i) = hx
-        }
-      }
-      val yMax = math.min(tile, height - ty * tile)
-      val xMax = math.min(tile, width - tx * tile)
-      for {
-        ly <- (halo until halo + yMax).iterator
-        lx <- halo until halo + xMax
-      } yield {
-        val i = ly * side + lx
-        val ddy = 0.5 * (vbuf(i + side) - vbuf(i - side))
-        val ddx = 0.5 * (vbuf(i + 1) - vbuf(i - 1))
-        (f, y0 + ly, x0 + lx, ddy * hybuf(i) + ddx * hxbuf(i),
-          hybuf(i), hxbuf(i))
-      }
-    }
-    .toDF("frame_no", "y", "x", "v", "hy", "hx")
-  }
-
-  /** Fused SECOND directional derivative along BOTH hat fields in ONE
-    * tile pass. Where the chained form runs [[directionalDeriv]] twice
-    * per field (four 33M-row tile shuffles per batch for the radial +
-    * azimuthal gradients at production frame size), this pass uses a
-    * halo of 2: the first derivative is computed tile-locally into the
-    * halo-1 ring with the SAME expression as [[directionalDeriv]]
-    * (zero for out-of-frame positions), then differentiated again for
-    * the tile interior — bit-identical output, one shuffle total.
-    *
-    * The key is packed into one long and the shuffle rows are flat
-    * primitive tuples: nested-tuple encoders measured as the dominant
-    * cost of the tile exchange. `q_bin` rides through the tiles so the
-    * per-Q-bin gradient stats (A8) need no join-back.
-    *
-    * Input: (frame_no, y, x, v, ry, rx, py, px) — the value plus radial
-    * and azimuthal unit-vector fields. Output: (frame_no, y, x,
-    * grad2_r, grad2_a, q_bin). */
-  def secondDirectionalDerivBoth(px: DataFrame, width: Int, height: Int,
-                                 tile: Int = 256): DataFrame = {
-    val spark = px.sparkSession
-    import spark.implicits._
-    val halo = 2
-    val side = tile + 2 * halo
-    requirePackable(width, height, tile)
-
-    val typed = px.select(col("frame_no").cast("long"), col("y").cast("int"),
-      col("x").cast("int"), col("v").cast("double"),
-      col("ry").cast("double"), col("rx").cast("double"),
-      col("py").cast("double"), col("px").cast("double"),
-      col("q_bin").cast("int"))
-      .as[(Long, Int, Int, Double, Double, Double, Double, Double, Int)]
-
-    val w = width; val h = height
-    typed.flatMap { case (f0, y, x, v, ry, rx, py, pxh, qb) =>
-      val f = checkFrameNo(f0)
-      val tys = ((y - halo) / tile) to ((y + halo) / tile)
-      val txs = ((x - halo) / tile) to ((x + halo) / tile)
-      for {
-        ty <- tys if ty >= 0 && ty * tile < h
-        tx <- txs if tx >= 0 && tx * tile < w
-      } yield ((f << 24) | (ty.toLong << 12) | tx.toLong,
-        y, x, v, ry, rx, py, pxh, qb)
-    }
-    .groupByKey(_._1)
-    .flatMapGroups { (key: Long, it) =>
-      val f = key >> 24
-      val ty = ((key >> 12) & 0xfff).toInt; val tx = (key & 0xfff).toInt
-      val n = side * side
-      val vb = new Array[Double](n)
-      val ryb = new Array[Double](n); val rxb = new Array[Double](n)
-      val pyb = new Array[Double](n); val pxb = new Array[Double](n)
-      val qbb = new Array[Int](n)
-      val y0 = ty * tile - halo; val x0 = tx * tile - halo
-      it.foreach { t =>
-        val ly = t._2 - y0; val lx = t._3 - x0
-        if (ly >= 0 && ly < side && lx >= 0 && lx < side) {
-          val i = ly * side + lx
-          vb(i) = t._4; ryb(i) = t._5; rxb(i) = t._6
-          pyb(i) = t._7; pxb(i) = t._8; qbb(i) = t._9
-        }
-      }
-      // first directional derivatives on the halo-1 ring, zero outside
-      // the frame (identical to directionalDeriv's absent-row zeros)
-      val d1r = new Array[Double](n); val d1a = new Array[Double](n)
-      var ly = 1
-      while (ly < side - 1) {
-        val gy = y0 + ly
-        var lx = 1
-        while (lx < side - 1) {
-          val gx = x0 + lx
-          if (gy >= 0 && gy < h && gx >= 0 && gx < w) {
-            val i = ly * side + lx
-            val ddy = 0.5 * (vb(i + side) - vb(i - side))
-            val ddx = 0.5 * (vb(i + 1) - vb(i - 1))
-            d1r(i) = ddy * ryb(i) + ddx * rxb(i)
-            d1a(i) = ddy * pyb(i) + ddx * pxb(i)
-          }
-          lx += 1
-        }
-        ly += 1
-      }
-      val yMax = math.min(tile, h - ty * tile)
-      val xMax = math.min(tile, w - tx * tile)
-      for {
-        ly <- (halo until halo + yMax).iterator
-        lx <- halo until halo + xMax
-      } yield {
-        val i = ly * side + lx
-        val d2r = 0.5 * (d1r(i + side) - d1r(i - side)) * ryb(i) +
-          0.5 * (d1r(i + 1) - d1r(i - 1)) * rxb(i)
-        val d2a = 0.5 * (d1a(i + side) - d1a(i - side)) * pyb(i) +
-          0.5 * (d1a(i + 1) - d1a(i - 1)) * pxb(i)
-        (f, y0 + ly, x0 + lx, d2r, d2a, qbb(i))
-      }
-    }
-    .toDF("frame_no", "y", "x", "grad2_r", "grad2_a", "q_bin")
-  }
-
-  /** Slim-shuffle variant of [[secondDirectionalDerivBoth]]: only
-    * (packed key, y, x, v) crosses the tile exchange — the hat fields and
-    * q_bin are recomputed INSIDE the kernel from the scalar geometry
-    * closure (bit-identical to the geometry columns, GeometrySpec), which
-    * roughly halves the encoder-bound shuffle row. Output and semantics
-    * are exactly [[secondDirectionalDerivBoth]]'s (asserted bit-equal in
-    * StencilSpec).
-    *
-    * Input: (frame_no, y, x, v); `geo(y, x) = (ry, rx, py, px, qBin)`. */
-  def secondDirectionalDerivGeo(px: DataFrame, width: Int, height: Int,
-                                geo: (Int, Int) =>
-                                  (Double, Double, Double, Double, Int),
-                                tile: Int = 256): DataFrame = {
-    val spark = px.sparkSession
-    import spark.implicits._
-    val halo = 2
-    val side = tile + 2 * halo
-    requirePackable(width, height, tile)
-
-    val typed = px.select(col("frame_no").cast("long"), col("y").cast("int"),
-      col("x").cast("int"), col("v").cast("double"))
-      .as[(Long, Int, Int, Double)]
-
-    val w = width; val h = height
-    typed.flatMap { case (f0, y, x, v) =>
-      val f = checkFrameNo(f0)
-      val tys = ((y - halo) / tile) to ((y + halo) / tile)
-      val txs = ((x - halo) / tile) to ((x + halo) / tile)
-      for {
-        ty <- tys if ty >= 0 && ty * tile < h
-        tx <- txs if tx >= 0 && tx * tile < w
-      } yield ((f << 24) | (ty.toLong << 12) | tx.toLong, y, x, v)
-    }
-    .groupByKey(_._1)
-    .flatMapGroups { (key: Long, it) =>
-      val f = key >> 24
-      val ty = ((key >> 12) & 0xfff).toInt; val tx = (key & 0xfff).toInt
-      val n = side * side
-      val vb = new Array[Double](n)
-      val y0 = ty * tile - halo; val x0 = tx * tile - halo
-      it.foreach { t =>
-        val ly = t._2 - y0; val lx = t._3 - x0
-        if (ly >= 0 && ly < side && lx >= 0 && lx < side)
-          vb(ly * side + lx) = t._4
-      }
-      // hat planes from the scalar geometry (in-frame positions only)
-      val ryb = new Array[Double](n); val rxb = new Array[Double](n)
-      val pyb = new Array[Double](n); val pxb = new Array[Double](n)
-      var ly = 0
-      while (ly < side) {
-        val gy = y0 + ly
-        if (gy >= 0 && gy < h) {
-          var lx = 0
-          while (lx < side) {
-            val gx = x0 + lx
-            if (gx >= 0 && gx < w) {
-              val g = geo(gy, gx)
-              val i = ly * side + lx
-              ryb(i) = g._1; rxb(i) = g._2; pyb(i) = g._3; pxb(i) = g._4
-            }
-            lx += 1
-          }
-        }
-        ly += 1
-      }
-      val d1r = new Array[Double](n); val d1a = new Array[Double](n)
-      ly = 1
-      while (ly < side - 1) {
-        val gy = y0 + ly
-        var lx = 1
-        while (lx < side - 1) {
-          val gx = x0 + lx
-          if (gy >= 0 && gy < h && gx >= 0 && gx < w) {
-            val i = ly * side + lx
-            val ddy = 0.5 * (vb(i + side) - vb(i - side))
-            val ddx = 0.5 * (vb(i + 1) - vb(i - 1))
-            d1r(i) = ddy * ryb(i) + ddx * rxb(i)
-            d1a(i) = ddy * pyb(i) + ddx * pxb(i)
-          }
-          lx += 1
-        }
-        ly += 1
-      }
-      val yMax = math.min(tile, h - ty * tile)
-      val xMax = math.min(tile, w - tx * tile)
-      for {
-        oy <- (halo until halo + yMax).iterator
-        ox <- halo until halo + xMax
-      } yield {
-        val i = oy * side + ox
-        val d2r = 0.5 * (d1r(i + side) - d1r(i - side)) * ryb(i) +
-          0.5 * (d1r(i + 1) - d1r(i - 1)) * rxb(i)
-        val d2a = 0.5 * (d1a(i + side) - d1a(i - side)) * pyb(i) +
-          0.5 * (d1a(i + 1) - d1a(i - 1)) * pxb(i)
-        (f, y0 + oy, x0 + ox, d2r, d2a, geo(y0 + oy, x0 + ox)._5)
-      }
-    }
-    .toDF("frame_no", "y", "x", "grad2_r", "grad2_a", "q_bin")
-  }
-
-  /** InternalRow-level variant of [[secondDirectionalDerivGeo]] — same
-    * output bit-for-bit (spec-asserted), minus the typed-Dataset object
-    * boundary AND the per-pixel shuffle row that dominated the tile
-    * exchange at 33M rows/batch:
-    *
-    *  - pixels are run-collected into LINE SEGMENTS before the exchange —
-    *    one (tile key, y, x0, values[]) row per contiguous x-run clipped
-    *    to each overlapping tile window, so the shuffle moves ~tile-width
-    *    times fewer rows (and encoder/serializer invocations) than the
-    *    per-pixel form. Out-of-order input degrades gracefully to shorter
-    *    runs; correctness never depends on the scan order.
-    *  - the exchange is a plain hash repartition of UnsafeRows, SORTED
-    *    within partitions on the tile key so the kernel streams exactly
-    *    ONE tile buffer at a time — per-task memory is one tile
-    *    regardless of how many frames a batch carries (the former
-    *    LongMap-of-all-tiles risked executor OOM on 10k-frame backfills).
-    *  - the kernel reads fields straight off InternalRows via
-    *    queryExecution.toRdd and emits UnsafeRows back through the
-    *    graftshim — no groupByKey, no encoder round-trip.
-    */
-  def secondDirectionalDerivGeoRaw(px: DataFrame, width: Int, height: Int,
-                                   geo: (Int, Int) =>
-                                     (Double, Double, Double, Double, Int),
-                                   tile: Int = 512): DataFrame = {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow,
-      UnsafeArrayData, UnsafeProjection}
-    import org.apache.spark.sql.types._
-    val spark = px.sparkSession
-    val halo = 2
-    val side = tile + 2 * halo
-    val w = width; val h = height
-    requirePackable(width, height, tile)
-
-    // out-of-range frames fail loudly inside codegen instead of silently
-    // colliding in the packed key
-    val f = when(col("frame_no").cast("long").between(0, MaxPackedFrame - 1),
-        col("frame_no").cast("long"))
-      .otherwise(raise_error(concat(
-        lit("frame_no outside the packed-tile-key range [0, 2^39): "),
-        col("frame_no").cast("string"))))
-    val slim = px.select(f.as("f"), col("y").cast("int").as("y"),
-      col("x").cast("int").as("x"), col("v").cast("double").as("v"))
-
-    // ---- stage 1: run-collect pixels into per-tile row segments --------
-    val segSchema = StructType(Seq(
-      StructField("bk", LongType, nullable = false),
-      StructField("y", IntegerType, nullable = false),
-      StructField("x0", IntegerType, nullable = false),
-      StructField("vs", ArrayType(DoubleType, containsNull = false),
-        nullable = false)))
-    val segRdd = slim.queryExecution.toRdd.mapPartitions { it =>
-      new Iterator[InternalRow] {
-        private val proj = UnsafeProjection.create(Array[DataType](LongType,
-          IntegerType, IntegerType, ArrayType(DoubleType, false)))
-        private val holder = new GenericInternalRow(4)
-        private val pending =
-          scala.collection.mutable.Queue.empty[InternalRow]
-        private var runF = 0L; private var runY = 0; private var runX0 = 0
-        private var runLen = 0
-        private val runBuf = new Array[Double](w)
-        private def flushRun(): Unit = if (runLen > 0) {
-          val x1 = runX0 + runLen - 1
-          // tile coordinates truncate toward zero exactly like the typed
-          // kernel's Int division (y/x are never below 0, so -2/tile -> 0
-          // both ways)
-          var ty = (runY - halo) / tile
-          val tyHi = (runY + halo) / tile
-          while (ty <= tyHi) {
-            if (ty >= 0 && ty * tile < h) {
-              var tx = (runX0 - halo) / tile
-              val txHi = (x1 + halo) / tile
-              while (tx <= txHi) {
-                if (tx >= 0 && tx * tile < w) {
-                  val wx0 = tx * tile - halo
-                  val wx1 = tx * tile + tile + halo - 1
-                  val cx0 = math.max(runX0, wx0)
-                  val cx1 = math.min(x1, wx1)
-                  if (cx0 <= cx1) {
-                    holder.update(0,
-                      (runF << 24) | (ty.toLong << 12) | tx.toLong)
-                    holder.update(1, runY)
-                    holder.update(2, cx0)
-                    holder.update(3, UnsafeArrayData.fromPrimitiveArray(
-                      java.util.Arrays.copyOfRange(runBuf,
-                        cx0 - runX0, cx1 - runX0 + 1)))
-                    pending.enqueue(proj(holder).copy())
-                  }
-                }
-                tx += 1
-              }
-            }
-            ty += 1
-          }
-          runLen = 0
-        }
-        private def fill(): Unit = {
-          while (pending.isEmpty && it.hasNext) {
-            val r = it.next()
-            val rf = r.getLong(0); val ry = r.getInt(1)
-            val rx = r.getInt(2); val rv = r.getDouble(3)
-            if (runLen > 0 && rf == runF && ry == runY &&
-                rx == runX0 + runLen && runLen < w) {
-              runBuf(runLen) = rv; runLen += 1
-            } else {
-              flushRun()
-              runF = rf; runY = ry; runX0 = rx
-              runBuf(0) = rv; runLen = 1
-            }
-          }
-          if (pending.isEmpty) flushRun()
-        }
-        def hasNext: Boolean = { fill(); pending.nonEmpty }
-        def next(): InternalRow = { fill(); pending.dequeue() }
-      }
-    }
-    val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val segs = org.apache.spark.sql.graftshim.Internals
-      .internalCreateDataFrame(spark, segRdd, segSchema)
-      .repartition(parts, col("bk"))
-      .sortWithinPartitions("bk")
-
-    // ---- stage 2: stream one sorted tile at a time through the kernel --
-    val outRdd = segs.queryExecution.toRdd.mapPartitions { it =>
-      new Iterator[InternalRow] {
-        private val proj = UnsafeProjection.create(Array[DataType](LongType,
-          IntegerType, IntegerType, DoubleType, DoubleType, IntegerType))
-        private val outTypes = Array[DataType](LongType, IntegerType,
-          IntegerType, DoubleType, DoubleType, IntegerType)
-        private val outRow = new org.apache.spark.sql.catalyst.expressions
-          .SpecificInternalRow(outTypes)
-        private val n = side * side
-        private val vb = new Array[Double](n)
-        private var curBk = Long.MinValue
-        private var haveTile = false
-        private var outIt: Iterator[InternalRow] = Iterator.empty
-
-        private def scatter(r: InternalRow): Unit = {
-          val bk = r.getLong(0)
-          val ty = ((bk >> 12) & 0xfff).toInt; val tx = (bk & 0xfff).toInt
-          val ly = r.getInt(1) - (ty * tile - halo)
-          val lx0 = r.getInt(2) - (tx * tile - halo)
-          val vs = r.getArray(3)
-          val m = vs.numElements()
-          var k = 0
-          while (k < m) {
-            vb(ly * side + lx0 + k) = vs.getDouble(k)
-            k += 1
-          }
-        }
-
-        /** Run the stencil over the CURRENT vb, then clear it for the next
-          * tile. The returned iterator reads only the freshly allocated
-          * derivative/hat planes, never vb, so draining it lazily while
-          * the next tile accumulates is safe. */
-        private def emitTile(bk: Long): Iterator[InternalRow] = {
-          val fNo = bk >> 24
-          val ty = ((bk >> 12) & 0xfff).toInt; val tx = (bk & 0xfff).toInt
-          val y0 = ty * tile - halo; val x0 = tx * tile - halo
-          val ryb = new Array[Double](n); val rxb = new Array[Double](n)
-          val pyb = new Array[Double](n); val pxb = new Array[Double](n)
-          val qbb = new Array[Int](n)
-          var ly = 0
-          while (ly < side) {
-            val gy = y0 + ly
-            if (gy >= 0 && gy < h) {
-              var lx = 0
-              while (lx < side) {
-                val gx = x0 + lx
-                if (gx >= 0 && gx < w) {
-                  val g = geo(gy, gx)
-                  val i = ly * side + lx
-                  ryb(i) = g._1; rxb(i) = g._2; pyb(i) = g._3; pxb(i) = g._4
-                  qbb(i) = g._5
-                }
-                lx += 1
-              }
-            }
-            ly += 1
-          }
-          val d1r = new Array[Double](n); val d1a = new Array[Double](n)
-          ly = 1
-          while (ly < side - 1) {
-            val gy = y0 + ly
-            var lx = 1
-            while (lx < side - 1) {
-              val gx = x0 + lx
-              if (gy >= 0 && gy < h && gx >= 0 && gx < w) {
-                val i = ly * side + lx
-                val ddy = 0.5 * (vb(i + side) - vb(i - side))
-                val ddx = 0.5 * (vb(i + 1) - vb(i - 1))
-                d1r(i) = ddy * ryb(i) + ddx * rxb(i)
-                d1a(i) = ddy * pyb(i) + ddx * pxb(i)
-              }
-              lx += 1
-            }
-            ly += 1
-          }
-          java.util.Arrays.fill(vb, 0.0)
-          val yMax = math.min(tile, h - ty * tile)
-          val xMax = math.min(tile, w - tx * tile)
-          (halo until halo + yMax).iterator.flatMap { oy =>
-            (halo until halo + xMax).iterator.map { ox =>
-              val i = oy * side + ox
-              val d2r = 0.5 * (d1r(i + side) - d1r(i - side)) * ryb(i) +
-                0.5 * (d1r(i + 1) - d1r(i - 1)) * rxb(i)
-              val d2a = 0.5 * (d1a(i + side) - d1a(i - side)) * pyb(i) +
-                0.5 * (d1a(i + 1) - d1a(i - 1)) * pxb(i)
-              outRow.setLong(0, fNo)
-              outRow.setInt(1, y0 + oy); outRow.setInt(2, x0 + ox)
-              outRow.setDouble(3, d2r); outRow.setDouble(4, d2a)
-              outRow.setInt(5, qbb(i))
-              proj(outRow).copy(): InternalRow
-            }
-          }
-        }
-
-        private def fill(): Unit = {
-          while (!outIt.hasNext && it.hasNext) {
-            val r = it.next()
-            val bk = r.getLong(0)
-            if (!haveTile) { curBk = bk; haveTile = true }
-            else if (bk != curBk) {
-              outIt = emitTile(curBk)
-              curBk = bk
-            }
-            scatter(r)
-          }
-          if (!outIt.hasNext && !it.hasNext && haveTile) {
-            outIt = emitTile(curBk)
-            haveTile = false
-          }
-        }
-        def hasNext: Boolean = { fill(); outIt.hasNext }
-        def next(): InternalRow = { fill(); outIt.next() }
-      }
-    }
-    val schema = StructType(Seq(
-      StructField("frame_no", LongType, nullable = false),
-      StructField("y", IntegerType, nullable = false),
-      StructField("x", IntegerType, nullable = false),
-      StructField("grad2_r", DoubleType, nullable = false),
-      StructField("grad2_a", DoubleType, nullable = false),
-      StructField("q_bin", IntegerType, nullable = false)))
-    org.apache.spark.sql.graftshim.Internals
-      .internalCreateDataFrame(spark, outRdd, schema)
-  }
-
-  /** Fused narrow-projection + second-directional-derivative pass — the
-    * [[secondDirectionalDerivGeoRaw]] exchange and the pipeline's pinned
-    * narrow projection emitted from ONE kernel, so the downstream stages
-    * (classification, integrals, stats) read a single checkpoint instead
-    * of two full-frame materializations per batch (the former separate
-    * `narrow` pin was a 33M-row × 14-column job of its own at production
-    * frame size — SCALE_r05's named next lever).
-    *
-    * Same segment exchange as the Raw form, with the per-pixel payload
-    * (corr_i and the two mask flags, packed to a byte) riding each run
-    * alongside the corrected values: ~9 B/px over the former ~20 B/px
-    * rows, still one shuffle, still one streamed tile in memory per task.
-    * All geometry columns are re-derived in-kernel from the full scalar
-    * mirror ([[graft.geometry.Geometry.scalarPixelGeoFull]], bit-identical
-    * to the `attach` columns), so nothing else crosses the wire.
+    * Exchange: pixels are run-collected into LINE SEGMENTS before the
+    * shuffle — one (packed tile key, y, x0, values[]) row per contiguous
+    * x-run clipped to each overlapping tile window, so the shuffle moves
+    * ~tile-width times fewer rows than a per-pixel form (out-of-order
+    * input only shortens the runs). The per-pixel payload (corr_i and
+    * the two mask flags, packed to a byte) rides each run alongside the
+    * corrected values, ~9 B/px. The exchange is a hash repartition of
+    * UnsafeRows sorted within partitions on the tile key, so the kernel
+    * streams ONE tile buffer at a time — per-task memory is one tile
+    * however many frames a batch carries — and reads and writes
+    * InternalRows directly (no encoder round-trip). All geometry columns
+    * are re-derived in-kernel from the scalar mirrors
+    * ([[graft.geometry.Geometry.scalarPixelGeoInto]] and
+    * [[graft.geometry.Geometry.scalarPixelHatsInto]], bit-identical to
+    * the `attach` columns), so nothing else crosses the wire and the
+    * downstream stages (classification, integrals, stats) read this one
+    * checkpoint.
     *
     * Input (dense per frame): (frame_no, y, x, corr_i, corr, base_mask,
     * is_outlier). Output: (frame_no, y, x, x_mm, y_mm, corr_i, corr,
@@ -909,8 +413,7 @@ object Stencil {
           // (~5.6 GB/run) — primitive int cursors plus the one
           // task-reused geometry holder bring the emit path's owned
           // churn to ~zero. Values bit-identical: same visit order,
-          // same arithmetic (the Into mirror is the same single
-          // implementation behind scalarPixelGeoFull).
+          // same arithmetic.
           new Iterator[InternalRow] {
             private var oy = halo
             private var ox = halo

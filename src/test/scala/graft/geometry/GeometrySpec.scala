@@ -9,25 +9,38 @@ class GeometrySpec extends SparkSpec {
   val cal = SyntheticFrame.testCalibration(64)
   lazy val geo = Geometry.build(spark, cal).cache()
 
+  // the two per-pixel mirrors the fused gradient kernel runs in place of
+  // the geometry join: scalarPixelHatsInto fills its hat planes (phat is
+  // (-rhat_x, rhat_y) by construction), scalarPixelGeoInto the columns
+  // of every emitted pixel
   test("scalarPixelGeo mirrors the attach columns bit-exactly " +
       "(hats + q_bin), including the beam-center pixel") {
-    val f = Geometry.scalarPixelGeo(cal)
+    val geoF = Geometry.scalarPixelGeoInto(cal)
+    val hatsF = Geometry.scalarPixelHatsInto(cal)
+    val g = new Geometry.PixelGeoHolder
+    val hats = new Array[Double](2)
     val cols = geo.select(col("y"), col("x"), col("rhat_y"),
         col("rhat_x"), col("phat_y"), col("phat_x"), col("q_bin"))
       .collect()
     assert(cols.length == 64 * 64)
     cols.foreach { r =>
-      val (ry, rx, py, px, qb) = f(r.getInt(0), r.getInt(1))
-      assert(ry == r.getDouble(2) && rx == r.getDouble(3) &&
-        py == r.getDouble(4) && px == r.getDouble(5) &&
-        qb == r.getInt(6),
-        s"scalar geo diverges at (${r.getInt(0)}, ${r.getInt(1)})")
+      val (y, x) = (r.getInt(0), r.getInt(1))
+      hatsF(y, x, hats)
+      assert(hats(0) == r.getDouble(2) && hats(1) == r.getDouble(3) &&
+        -hats(1) == r.getDouble(4) && hats(0) == r.getDouble(5),
+        s"scalarPixelHatsInto diverges at ($y, $x)")
+      geoF(y, x, g)
+      assert(g.rhatY == r.getDouble(2) && g.rhatX == r.getDouble(3) &&
+        g.phatY == r.getDouble(4) && g.phatX == r.getDouble(5) &&
+        g.qBin == r.getInt(6),
+        s"scalarPixelGeoInto hats/q_bin diverge at ($y, $x)")
     }
   }
 
   test("scalarPixelGeoFull mirrors ALL narrow-projection attach columns " +
       "bit-exactly (x_mm/y_mm/tth_bin/q/azim/azim_flipped)") {
-    val f = Geometry.scalarPixelGeoFull(cal)
+    val f = Geometry.scalarPixelGeoInto(cal)
+    val g = new Geometry.PixelGeoHolder
     val cols = geo.select(col("y"), col("x"), col("x_mm"), col("y_mm"),
         col("tth_bin"), col("q"), col("azim"), col("azim_flipped"),
         col("rhat_y"), col("rhat_x"), col("phat_y"), col("phat_x"),
@@ -35,7 +48,7 @@ class GeometrySpec extends SparkSpec {
       .collect()
     assert(cols.length == 64 * 64)
     cols.foreach { r =>
-      val g = f(r.getInt(0), r.getInt(1))
+      f(r.getInt(0), r.getInt(1), g)
       assert(g.xMm == r.getDouble(2) && g.yMm == r.getDouble(3) &&
         g.tthBin == r.getInt(4) && g.q == r.getDouble(5) &&
         g.azim == r.getDouble(6) && g.azimFlipped == r.getDouble(7) &&

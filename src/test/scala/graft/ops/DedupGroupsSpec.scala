@@ -85,6 +85,28 @@ class DedupGroupsSpec extends SparkSpec {
     assert(e.getMessage.contains("converge"))
   }
 
+  test("RDD fast path returns a pin: inside Pins.scope it leaves no " +
+      "persistent RDD behind") {
+    val sc = spark.sparkContext
+    // a null node id exercises the (null, null) re-attach branch
+    val pairs = Seq((Some(1L), Some(2L)), (Some(2L), Some(3L)),
+      (Some(5L), Some(6L)), (None, Some(7L))).toDF("a", "b")
+    val before = sc.getPersistentRDDs.keySet
+    val g = graft.core.Pins.scope {
+      val out = Dedup.connectedGroups(pairs, "a", "b")
+      assert(graft.core.Pins.rddOf(out).isDefined,
+        "connectedGroups' RDD path did not return a pin")
+      out.collect().map(r =>
+        Option(r.get(0)).map(_.asInstanceOf[Long]) ->
+          Option(r.get(1)).map(_.asInstanceOf[Long])).toMap
+    }
+    assert(g == Map(Some(1L) -> Some(1L), Some(2L) -> Some(1L),
+      Some(3L) -> Some(1L), Some(5L) -> Some(5L), Some(6L) -> Some(5L),
+      Some(7L) -> Some(7L), None -> None))
+    val leaked = sc.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"persistent RDDs left behind: $leaked")
+  }
+
   test("winnowFingerprints matches a brute-force scalar winnow") {
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog again and again"),

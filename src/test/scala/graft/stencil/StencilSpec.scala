@@ -2,6 +2,31 @@ package graft.stencil
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.geometry.Geometry.{PixelGeoFn, PixelGeoHolder, PixelHatsFn}
+
+/** Radial hats read from w-wide row-major tables: drives the fused
+  * gradient kernel with a hat field no calibration mirror produces, or
+  * with hats collected from the relational geometry table. */
+final class TableHats(w: Int, ry: Array[Double], rx: Array[Double])
+    extends PixelHatsFn {
+  def apply(y: Int, x: Int, out: Array[Double]): Unit = {
+    out(0) = ry(y * w + x); out(1) = rx(y * w + x)
+  }
+}
+
+/** The per-pixel columns the fused kernel emits, read from w-wide
+  * row-major tables instead of the calibration mirror. */
+final class TableGeo(w: Int, xMm: Array[Double], yMm: Array[Double],
+                     tthBin: Array[Int], qBin: Array[Int],
+                     q: Array[Double], azim: Array[Double],
+                     azimFlipped: Array[Double]) extends PixelGeoFn {
+  def apply(y: Int, x: Int, out: PixelGeoHolder): Unit = {
+    val i = y * w + x
+    out.xMm = xMm(i); out.yMm = yMm(i); out.tthBin = tthBin(i)
+    out.qBin = qBin(i); out.q = q(i); out.azim = azim(i)
+    out.azimFlipped = azimFlipped(i)
+  }
+}
 
 class MorphologySpec extends SparkSpec {
   import spark.implicits._
@@ -322,33 +347,48 @@ class InterpolateSpec extends SparkSpec {
       a == b || (a.isNaN && b.isNaN) })
   }
 
+  // one (frame, y, x) -> (grad2_r, grad2_a, q_bin) map of the fused
+  // narrow+gradient kernel's output
+  private def gradMap(d: org.apache.spark.sql.DataFrame) = d.collect()
+    .map(r => (r.getLong(0), r.getInt(1), r.getInt(2)) ->
+      (r.getDouble(14), r.getDouble(15), r.getInt(10))).toMap
+
   test("fused dual second directional derivative equals two chained " +
       "directionalDeriv passes bit-exactly, across tiles and frames") {
+    // an arbitrary per-pixel hat field (not a calibration's) on a frame
+    // that is no multiple of the tile; the chained reference is the
+    // single-hat pass — first derivatives, hat join, projection — twice
     val w = 56; val h = 40
     val rnd = new scala.util.Random(11)
-    val rows = for (f <- 1 to 2; y <- 0 until h; x <- 0 until w) yield {
-      val ang = rnd.nextDouble() * math.Pi * 2
-      (f, y, x, rnd.nextDouble() * 100,
-        math.sin(ang), math.cos(ang),        // radial hat
-        -math.cos(ang), math.sin(ang),       // azimuthal hat
-        (x / 7) + 1)                         // a fake q_bin
-    }
-    val in = rows.toDF("frame_no", "y", "x", "v", "ry", "rx", "py", "px",
-      "q_bin")
+    val ang = Array.fill(w * h)(rnd.nextDouble() * math.Pi * 2)
+    val ry = ang.map(math.sin); val rx = ang.map(math.cos)
+    val hats = (for (y <- 0 until h; x <- 0 until w) yield {
+      val i = y * w + x
+      (y, x, ry(i), rx(i), -rx(i), ry(i))   // radial hat, azimuthal hat
+    }).toDF("y", "x", "ry", "rx", "py", "px")
+    val v = (for (f <- 1L to 2L; y <- 0 until h; x <- 0 until w)
+      yield (f, y, x, rnd.nextDouble() * 100)).toDF("frame_no", "y", "x", "v")
     def chained(hy: String, hx: String) = {
-      val first = Stencil.directionalDeriv(in.select($"frame_no", $"y",
-        $"x", $"v", col(hy).as("hy"), col(hx).as("hx")), w, h, tile = 16)
-      Stencil.directionalDeriv(first, w, h, tile = 16)
-        .select($"frame_no", $"y", $"x", $"v")
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2)) ->
+      def pass(df: org.apache.spark.sql.DataFrame) =
+        Stencil.derivatives(df, w, h, tile = 16)
+          .join(hats, Seq("y", "x"))
+          .select($"frame_no", $"y", $"x",
+            ($"ddy" * col(hy) + $"ddx" * col(hx)).as("v"))
+      pass(pass(v)).collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getInt(2)) ->
           r.getDouble(3)).toMap
     }
-    val fused = Stencil.secondDirectionalDerivBoth(in, w, h, tile = 16)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2)) ->
-        (r.getDouble(3), r.getDouble(4), r.getInt(5))).toMap
+    val core = v.select($"frame_no", $"y", $"x", $"v".as("corr_i"),
+      $"v".as("corr"), lit(false).as("base_mask"),
+      lit(false).as("is_outlier"))
+    val qBin = Array.tabulate(w * h)(i => (i % w) / 7 + 1)  // a fake q_bin
+    val zeros = Array.fill(w * h)(0.0)
+    val fused = gradMap(Stencil.secondDirectionalDerivNarrowRaw(core, w, h,
+      new TableGeo(w, zeros, zeros, qBin, qBin, zeros, zeros, zeros),
+      new TableHats(w, ry, rx), tile = 16))
     val cr = chained("ry", "rx"); val ca = chained("py", "px")
     assert(fused.keySet == cr.keySet)
-    fused.foreach { case (k, (g2r, g2a, qb)) =>
+    fused.foreach { case (k, (g2r, g2a, _)) =>
       assert(g2r == cr(k), s"grad2_r differs at $k")
       assert(g2a == ca(k), s"grad2_a differs at $k")
     }
@@ -358,28 +398,46 @@ class InterpolateSpec extends SparkSpec {
 
   test("slim-shuffle geo kernel equals the generic dual derivative " +
       "bit-exactly on a real calibration") {
+    // slim: the kernel re-derives geometry in-task from the calibration
+    // mirrors; generic: the same kernel fed the relational geometry
+    // table's own columns
     val cal = graft.core.SyntheticFrame.testCalibration(64)
     val (h, w) = cal.imageSize
     val rnd = new scala.util.Random(5)
-    val rows = for (f <- 1 to 2; y <- 0 until h; x <- 0 until w)
-      yield (f, y, x, rnd.nextDouble() * 100)
-    val px = rows.toDF("frame_no", "y", "x", "v")
-    val withHats = graft.geometry.Geometry.attach(px, cal)
-      .select($"frame_no", $"y", $"x", $"v", $"rhat_y".as("ry"),
-        $"rhat_x".as("rx"), $"phat_y".as("py"), $"phat_x".as("px"),
-        $"q_bin")
-    def toMap(d: org.apache.spark.sql.DataFrame) = d.collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2)) ->
-        (r.getDouble(3), r.getDouble(4), r.getInt(5))).toMap
-    val generic = toMap(Stencil.secondDirectionalDerivBoth(
-      withHats, w, h, tile = 16))
-    val slim = toMap(Stencil.secondDirectionalDerivGeo(
-      px, w, h, graft.geometry.Geometry.scalarPixelGeo(cal), tile = 16))
+    val core = (for (f <- 1 to 2; y <- 0 until h; x <- 0 until w) yield {
+      val v = rnd.nextDouble() * 100
+      (f, y, x, v, v, false, false)
+    }).toDF("frame_no", "y", "x", "corr_i", "corr", "base_mask",
+      "is_outlier")
+    val n = w * h
+    val (xMm, yMm, q, azim, azimF, ry, rx) = (new Array[Double](n),
+      new Array[Double](n), new Array[Double](n), new Array[Double](n),
+      new Array[Double](n), new Array[Double](n), new Array[Double](n))
+    val (tthBin, qBin) = (new Array[Int](n), new Array[Int](n))
+    graft.geometry.Geometry.build(spark, cal)
+      .select($"y", $"x", $"x_mm", $"y_mm", $"tth_bin", $"q_bin", $"q",
+        $"azim", $"azim_flipped", $"rhat_y", $"rhat_x")
+      .collect().foreach { r =>
+        val i = r.getInt(0) * w + r.getInt(1)
+        xMm(i) = r.getDouble(2); yMm(i) = r.getDouble(3)
+        tthBin(i) = r.getInt(4); qBin(i) = r.getInt(5)
+        q(i) = r.getDouble(6); azim(i) = r.getDouble(7)
+        azimF(i) = r.getDouble(8); ry(i) = r.getDouble(9)
+        rx(i) = r.getDouble(10)
+      }
+    def rows(geo: PixelGeoFn, hats: PixelHatsFn) =
+      Stencil.secondDirectionalDerivNarrowRaw(core, w, h, geo, hats,
+          tile = 16)
+        .collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getInt(2)) -> r.toSeq)
+        .toMap
+    val slim = rows(graft.geometry.Geometry.scalarPixelGeoInto(cal),
+      graft.geometry.Geometry.scalarPixelHatsInto(cal))
+    val generic = rows(
+      new TableGeo(w, xMm, yMm, tthBin, qBin, q, azim, azimF),
+      new TableHats(w, ry, rx))
+    assert(slim.size == 2 * n)
     assert(slim == generic, "slim geo kernel diverges from generic")
-    // the InternalRow-level kernel is the same math behind a raw exchange
-    val raw = toMap(Stencil.secondDirectionalDerivGeoRaw(
-      px, w, h, graft.geometry.Geometry.scalarPixelGeo(cal), tile = 16))
-    assert(raw == generic, "raw geo kernel diverges from generic")
   }
 
   test("fused narrow+gradient kernel equals the grad-only Raw kernel AND " +
@@ -397,20 +455,21 @@ class InterpolateSpec extends SparkSpec {
     }
     val core = rows.toDF("frame_no", "y", "x", "corr_i", "corr",
       "base_mask", "is_outlier")
-    val fused = Stencil.secondDirectionalDerivNarrowRaw(core, w, h,
-      graft.geometry.Geometry.scalarPixelGeoInto(cal),
-      graft.geometry.Geometry.scalarPixelHatsInto(cal), tile = 16)
-      .collect()
+    def run(df: org.apache.spark.sql.DataFrame) =
+      Stencil.secondDirectionalDerivNarrowRaw(df, w, h,
+        graft.geometry.Geometry.scalarPixelGeoInto(cal),
+        graft.geometry.Geometry.scalarPixelHatsInto(cal), tile = 16)
+    val fused = run(core).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2)) -> r).toMap
 
-    // gradients + q_bin: bit-equal to the established Raw kernel
-    val raw = Stencil.secondDirectionalDerivGeoRaw(
-        core.select($"frame_no", $"y", $"x", $"corr".as("v")), w, h,
-        graft.geometry.Geometry.scalarPixelGeo(cal), tile = 16)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2)) ->
-        (r.getDouble(3), r.getDouble(4), r.getInt(5))).toMap
-    assert(fused.keySet == raw.keySet)
-    raw.foreach { case (k, (g2r, g2a, qb)) =>
+    // gradients + q_bin: bit-equal to a grad-only run of the same kernel
+    // (no payload: corr_i = corr, no flags set) — the payload riding
+    // through the exchange never perturbs the derivative planes
+    val gradOnly = gradMap(run(core.select($"frame_no", $"y", $"x",
+      $"corr".as("corr_i"), $"corr", lit(false).as("base_mask"),
+      lit(false).as("is_outlier"))))
+    assert(fused.keySet == gradOnly.keySet)
+    gradOnly.foreach { case (k, (g2r, g2a, qb)) =>
       val fr = fused(k)
       assert(fr.getDouble(14) == g2r && fr.getDouble(15) == g2a &&
         fr.getInt(10) == qb, s"fused gradients diverge at $k")
@@ -541,31 +600,54 @@ class DirectionalDerivSpec extends SparkSpec {
 
   test("fused directional derivative equals convolve+join bit-exactly " +
       "through two chained passes") {
-    val n = 24
-    val rnd = new scala.util.Random(5)
-    val rows = for (y <- 0 until n; x <- 0 until n) yield {
-      val ang = math.atan2(y - 12.0, x - 12.0)
-      (1L, y, x, rnd.nextDouble() * 100, math.sin(ang), math.cos(ang))
+    // the fused narrow+gradient kernel against the round-1 formulation:
+    // convolve2d first derivatives, hat join, projection — twice per hat
+    // field — on a real calibration, two frames and 16 tiles a frame
+    val cal = graft.core.SyntheticFrame.testCalibration(64)
+    val (h, w) = cal.imageSize
+    val rnd = new scala.util.Random(11)
+    // dense frames with non-trivial payload: corr != corr_i, scattered
+    // mask/outlier flags (including runs broken mid-row to exercise the
+    // run-collector's payload splitting)
+    val rows = for (f <- 1 to 2; y <- 0 until h; x <- 0 until w) yield {
+      val ci = rnd.nextDouble() * 100
+      (f, y, x, ci, ci * (0.5 + rnd.nextDouble()),
+        rnd.nextDouble() < 0.07, rnd.nextDouble() < 0.11)
     }
-    val px = rows.toDF("frame_no", "y", "x", "v", "hy", "hx")
+    val core = rows.toDF("frame_no", "y", "x", "corr_i", "corr",
+      "base_mask", "is_outlier")
+    val fused = Stencil.secondDirectionalDerivNarrowRaw(core, w, h,
+      graft.geometry.Geometry.scalarPixelGeoInto(cal),
+      graft.geometry.Geometry.scalarPixelHatsInto(cal), tile = 16)
+      .collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2)) -> r).toMap
 
-    // oracle: the round-1 convolve2d + hats-join formulation
-    val hats = px.select($"frame_no", $"y", $"x", $"hy", $"hx")
-    def project(df: org.apache.spark.sql.DataFrame) =
-      Stencil.derivatives(df, n, n, tile = 8)
+    val attached = graft.geometry.Geometry.attach(core, cal)
+      .withColumn("frame_no", $"frame_no".cast("long"))
+    val hats = attached.select($"frame_no", $"y", $"x", $"rhat_y",
+      $"rhat_x", $"phat_y", $"phat_x")
+    def project(df: org.apache.spark.sql.DataFrame, hy: String,
+                hx: String) =
+      Stencil.derivatives(df, w, h, tile = 16)
         .join(hats, Seq("frame_no", "y", "x"))
         .select($"frame_no", $"y", $"x",
-          ($"ddy" * $"hy" + $"ddx" * $"hx").as("v"))
-    val oracle = project(project(px.select($"frame_no", $"y", $"x", $"v")))
-      .collect().map(r => (r.getInt(1), r.getInt(2)) -> r.getDouble(3))
-      .toMap
-
-    val fused = Stencil.directionalDeriv(
-        Stencil.directionalDeriv(px, n, n, tile = 8), n, n, tile = 8)
-      .collect().map(r => (r.getInt(1), r.getInt(2)) -> r.getDouble(3))
-      .toMap
-    assert(fused.keySet == oracle.keySet)
-    fused.foreach { case (k, v) =>
-      assert(v == oracle(k), s"$k: $v vs ${oracle(k)}") }
+          ($"ddy" * col(hy) + $"ddx" * col(hx)).as("v"))
+    def second(hy: String, hx: String) = {
+      val v = attached.select($"frame_no", $"y", $"x", $"corr".as("v"))
+      project(project(v, hy, hx), hy, hx).collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getInt(2)) ->
+          r.getDouble(3)).toMap
+    }
+    val g2r = second("rhat_y", "rhat_x")
+    val g2a = second("phat_y", "phat_x")
+    val qBin = attached.select($"frame_no", $"y", $"x", $"q_bin")
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2)) ->
+        r.getInt(3)).toMap
+    assert(fused.keySet == g2r.keySet && fused.keySet == g2a.keySet)
+    fused.foreach { case (k, fr) =>
+      assert(fr.getDouble(14) == g2r(k), s"grad2_r differs at $k")
+      assert(fr.getDouble(15) == g2a(k), s"grad2_a differs at $k")
+      assert(fr.getInt(10) == qBin(k), s"q_bin differs at $k")
+    }
   }
 }
