@@ -1,17 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.Session
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.builder("graft-bench").getOrCreate()
     // warm the JVM/codegen paths once so fixed startup cost is not
     // attributed to whichever query runs first
     try SparkEntry.queries("q1_pricing")(spark, sfDir)

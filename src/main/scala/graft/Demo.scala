@@ -1,21 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.Session
 
 /** Runs the flagship per-frame pipeline (SparkEntry.entry) standalone and
   * prints the integral table head — the same call the driver smoke-checks.
   * `sbt "runMain graft.Demo"` */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.builder("graft-demo").getOrCreate()
     val df = SparkEntry.entry(spark)
     df.printSchema()
     val n = df.count()

@@ -750,7 +750,7 @@ object Dedup {
     // materialized stage boundary: three consumers (both self-join
     // sides + the final join-back) read the ranked table — unpinned,
     // each re-executes the join + window lineage from the scan
-    // (ReuseExchange does not fire; ScanCensus/§22)
+    // (ReuseExchange does not fire; SCALE_r09 §22)
     val ranked = Pins.pin(vectors.join(assigned, idCol)
       .select(col(idCol), col("v"), col("cid"),
         row_number().over(w).as("__sd_r")))

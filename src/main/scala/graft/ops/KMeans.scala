@@ -127,7 +127,7 @@ object KMeans {
     // (the init/PQ-codebook bounded-table idiom, k rows): without it the
     // returned assignment's lineage embeds the whole iteration chain, so
     // EVERY downstream consumer re-executes every Lloyd pass — the
-    // ScanCensus/§22 defect class (dedup_semantic re-scanned the corpus
+    // SCALE_r09 §22 defect class (dedup_semantic re-scanned the corpus
     // 12x through exactly this). With it, training executes each pass
     // once; the values are bit-identical (collecting k rows changes
     // nothing numeric). The empty-cluster keep-previous rule — formerly

@@ -126,7 +126,7 @@ object NaiveBayes {
     // is a MATERIALIZED stage boundary (narrow: id + token — the
     // topKCosineRp rule): the likelihood sum and the occurrence count
     // both read it, and unpinned each would re-execute the corpus
-    // explode + vocabulary semi-join (ScanCensus/§22)
+    // explode + vocabulary semi-join (SCALE_r09 §22)
     val tk = Pins.pin(toks(df, textCol, col(idCol))
       .join(model.tokenCounts.select(col("token")).distinct(),
         Seq("token"), "left_semi"))

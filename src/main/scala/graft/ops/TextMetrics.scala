@@ -326,7 +326,7 @@ object TextMetrics {
     * ([[unigramLogprobAgainst]]'s, smoothed-floor OOV) come from a
     * single token explode joined against BOTH vocabularies. The
     * separate two-call composition pays the corpus token pass twice
-    * (ScanCensus §23); this pays it once — at 100 TB the corpus scan
+    * (SCALE_r09 §23); this pays it once — at 100 TB the corpus scan
     * IS the cost of DSIR. Every ln rounding, smoothing branch and
     * decimal-mean step is verbatim from the two parent functions, so
     * results are bit-identical to the composition. Returns
@@ -393,7 +393,7 @@ object TextMetrics {
     // stage boundary (vocabulary-sized, the artifact a production LM
     // scorer persists): both the conditional denominator and the
     // scoring join read it, and unpinned each re-executed the corpus
-    // explode+count (ScanCensus/§22). The remaining TWO corpus passes
+    // explode+count (SCALE_r09 §22). The remaining TWO corpus passes
     // (count build, scoring) are the honest train-then-score shape.
     val c2 = Pins.pin(rows.groupBy(col("bg"), col("w1"))
       .agg(count(lit(1)).as("c2")))

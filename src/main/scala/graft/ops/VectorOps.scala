@@ -139,7 +139,7 @@ object VectorOps {
     // boundary (narrow: id + rDim doubles — the staged projection a
     // production index persists): the shortlist's bounded-agg +
     // join-back phases both read it, and unpinned each re-derives the
-    // projection from the corpus scan (ScanCensus/§22)
+    // projection from the corpus scan (SCALE_r09 §22)
     val cr = Pins.pin(candidates.select(col(idCol).as("cand_id"),
         randomProject(col(vecCol), dim, rDim).as("crv")))
     val scored = cr.join(broadcast(qr.select(col("query_id"), col("qrv"))),
@@ -222,7 +222,7 @@ object VectorOps {
     * MATERIALIZED stage boundary — `localCheckpoint` PINS it because
     * three consumers read it (fwd means, bwd means, the final ranking)
     * and unpinned the cosine scoring would re-execute per consumer
-    * (ScanCensus/§22). The fwd/bwd mean tables are per-vector
+    * (SCALE_r09 §22). The fwd/bwd mean tables are per-vector
     * (bounded by the endpoint counts) and broadcast back onto the
     * pinned pairs. A pair referencing a vector absent from src/tgt
     * FAILS LOUDLY naming the pair (the `containmentOverPairs` guard —
@@ -327,7 +327,7 @@ object VectorOps {
     // bands — negligible at B=2, real money at the B=4–8 recall
     // settings). Pinning the two narrow (id, bucket) tables makes the
     // leaf-scan count flat in B (the topKCosineRp multi-consumer rule;
-    // ScanCensus). At B=1 there is exactly one consumer — skip the
+    // SCALE_r09 §23). At B=1 there is exactly one consumer — skip the
     // materialization and let the projection ride the scan.
     def bandUnion(l: DataFrame, r: DataFrame) =
       (0 until bands).map { i =>

@@ -8,10 +8,10 @@ import graft.ops.TextMetrics
 
 /** The curation pipeline's INGEST → QUALITY → EXACT-DEDUP stage as one
   * shared builder: the `pipeline_curate` query materializes it at the
-  * stage boundary, and the CuratePlanProbe tool explains the SAME plan
-  * (a probe auditing a hand-copied rebuild would silently drift from
-  * the code that ships — the plan claims in SCALE_r09.md §2 are about
-  * THIS builder). */
+  * stage boundary, and `PlanInvariantsSpec` asserts the SAME plan (an
+  * audit of a hand-copied rebuild would silently drift from the code
+  * that ships — the plan claims in SCALE_r09.md §2 are about THIS
+  * builder). */
 object CurateStages {
 
   /** The ingest contract: the four corpus fields, parsed as declared. */

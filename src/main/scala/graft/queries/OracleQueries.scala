@@ -3470,7 +3470,7 @@ object OracleQueries {
         val sketch = Sketches.cmsSketch(ev, col("user_id"),
           CmsDepth, CmsWidth)
         // bounded exact-reference table, pinned: the probe AND the
-        // comparison join both read it (ScanCensus/§22)
+        // comparison join both read it (SCALE_r09 §22)
         val keys = Pins.pin(ev.groupBy(col("user_id"))
           .agg(count(lit(1)).as("n_exact"))
           .where(col("user_id") < 50))
@@ -4132,7 +4132,7 @@ object OracleQueries {
       (s, dir) => {
         val docs = t(s, dir, "documents")
         val target = docs.where(col("lang") === "en")
-        // one-pass log-ratio scorer (ScanCensus §23): the corpus token
+        // one-pass log-ratio scorer (SCALE_r09 §23): the corpus token
         // pass runs ONCE for both models, bit-identical to the
         // unigramLogprob + unigramLogprobAgainst composition
         val scored = TextMetrics.unigramLogRatio(docs, "doc_id", "text",
@@ -4508,8 +4508,8 @@ object OracleQueries {
         import org.apache.spark.sql.graftshim.Internals.{column => toCol, expression => toExpr}
         val docs = t(s, dir, "documents")
         // 1-3. ingest + quarantine, quality filter, map-side exact
-        // dedup — the shared CurateStages builder (also what the
-        // CuratePlanProbe explain audit runs). The result is the
+        // dedup — the shared CurateStages builder (also the plan
+        // PlanInvariantsSpec asserts). The result is the
         // cleaned-corpus STAGE BOUNDARY: materialized once (a
         // production pipeline writes this table to parquet), because
         // four downstream consumers read it — the signature
@@ -4517,7 +4517,7 @@ object OracleQueries {
         // decontamination explode — and each would otherwise
         // re-execute the whole scan lineage
         // Fan-out measured OFF for this query in both forms
-        // (FanoutAB 2026-08-19): blanket 5.79 off / 5.90 on, and a
+        // (OPTIMIZATION_r16, 2026-08-19): blanket 5.79 off / 5.90 on, and a
         // SELECTIVE fan of only this stage-1 corpus pass 6.03 off /
         // 6.39 on — the downstream shingle explodes and anti-joins
         // re-key everything anyway, so the extra exchange never pays.
@@ -4531,7 +4531,7 @@ object OracleQueries {
         // deterministic doc_id key, self-disabling at scale where the
         // stage output is already many-partitioned) parallelizes every
         // consumer with no per-consumer exchange. Measured interleaved
-        // (FanoutAB, this row is NOT whitelisted so the toggle isolates
+        // (OPTIMIZATION_r17, this row is NOT whitelisted so the toggle isolates
         // this site): off 3.95/4.26, on 3.60/3.69 min/mean.
         // (The r16 probe that measured fan-out OFF for this query
         // fanned the stage-1 SCAN — re-keyed by every downstream agg —
@@ -6301,25 +6301,23 @@ object OracleQueries {
   )
 
   /** Queries that measurably BENEFIT from the small-input scan fan-out
-    * (see [[fanout]]) — the per-query opt-in list, measured by the
-    * interleaved FanoutAB probe at sf0.1/local[32] (2026-08-19):
-    * blanket-on summed −21.4 s on these thirty rows (per-row compute
-    * dominates: decimal aggregation, text metrics, distance/encode
-    * arithmetic) but +25 s of scattered ~0.3–0.5 s losses across the
-    * ~60 light rows whose tiny multi-stage plans pay fixed per-stage
-    * overhead for every extra exchange — so fan-out is off unless a
-    * query's own measurement says otherwise. The staged index builders
+    * (see [[fanout]]) — the per-query opt-in list. Re-measured on a
+    * 4-vCPU, 15 GB host (2026-10-19) with `graft.tools.Probe` at sf0.1:
+    * `spark.graft.scan.fanoutMaxBytes` default vs 0, 5 interleaved pairs
+    * per row; a row stays only if fan-out won every pair (the table is
+    * in CHANGES.md). Per-row compute dominates these (decimal
+    * aggregation, text metrics, distance/encode arithmetic); on the
+    * light rows an extra exchange is one more stage of fixed overhead
+    * (OPTIMIZATION_r16 §2), so fan-out is off unless a query's own
+    * measurement says otherwise. The staged index builders
     * (PqStage/PcaStage/BpeStage) opt in at their own read sites. */
   private val FanoutQueries: Set[String] = Set(
-    "a2_integrate", "a7_spot_stats", "a8_grad_stats", "agg_cube",
-    "agg_rollup", "cluster_kmeans", "cluster_quota_sample",
-    "dedup_canonical", "dedup_containment", "dedup_containment_lsh",
+    "a8_grad_stats", "agg_cube", "cluster_kmeans", "dedup_containment_lsh",
     "dedup_minhash", "dedup_minhash_groups", "dedup_ngram_jaccard",
-    "dedup_semantic", "dedup_substring_spans", "embedding_covariance",
-    "embedding_pca", "html_links", "html_main", "lang_id", "pq_train",
-    "q1_pricing", "quality_c4", "quality_funnel", "quality_gopher",
-    "text_bigram_logprob", "text_extract",
-    "text_redact", "warc_charset")
+    "dedup_substring_spans", "embedding_covariance", "embedding_pca",
+    "html_links", "html_main", "lang_id", "q1_pricing", "quality_c4",
+    "quality_funnel", "quality_gopher", "text_bigram_logprob",
+    "text_extract", "text_redact", "warc_charset")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map(q => q.name -> { (s: SparkSession, dir: String) =>

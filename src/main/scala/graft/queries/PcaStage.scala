@@ -96,7 +96,7 @@ object PcaStage {
     * 8 dependent collect-routed actions whose scheduling gaps and
     * single-partition tails leave most cores idle at bench scale, and
     * dimStats' two actions (mean collect + 64-row stats collect) ride
-    * under them. Interleaved A/B (StageOverlapAB, one JVM, alternating
+    * under them. Interleaved A/B (OPTIMIZATION_r17, one JVM, alternating
     * arms): warm seq 4.02–4.42 s vs par 3.03–3.19 s; the cold first
     * rep (what the bench row actually times) 49.3 → 7.7 s at a
     * throttled phase — the two chains' Janino compiles overlap. */

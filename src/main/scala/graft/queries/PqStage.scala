@@ -84,7 +84,7 @@ object PqStage {
     * compiles overlap (most of the cold cost this row times).
     * staged()'s own trailing cellCentroids call lands on the memo the
     * third chain populated (or blocks on its lock — either way
-    * computed once). Interleaved A/B (StageOverlapAB, one JVM,
+    * computed once). Interleaved A/B (OPTIMIZATION_r17, one JVM,
     * alternating arms, fresh session per rep): warm seq 3.07–4.79 s
     * vs par 1.45–1.95 s; cold rep 24.7 → 3.9 s. Artifacts are
     * bit-identical — overlap changes when jobs run, never what each

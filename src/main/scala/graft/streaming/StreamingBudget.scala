@@ -22,7 +22,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
   * deterministic order — ascending `order_id` (the caller's arrival
   * sequence: a file offset, an event time, a monotonic id) — before
   * the budget walk. Replays of the same batch therefore admit the
-  * same set whatever the shuffle layout (the DeterminismSweep rule
+  * same set whatever the shuffle layout (the DeterminismSpec rule
   * applied to streaming state).
   *
   * State per BUDGETED stratum: ONE long (admitted tokens so far) —

@@ -153,11 +153,8 @@ object ScaleGen {
 
   def main(args: Array[String]): Unit = {
     val outBase = if (args.length > 0) args(0) else "/root/repo/tmp/scalegen"
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session.builder("graft-scalegen", logLevel = "ERROR")
+      .getOrCreate()
     // g01 mirrors sf0.1's row counts; g1 is exactly 10x every table
     writeScale(spark, s"$outBase/g01", docs = 5000, vecs = 2000,
       li = 600000L, seed = 4242L, files = 8)

@@ -1,9 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.core.{Pins, SyntheticFrame}
+import graft.core.{Pins, Session, SyntheticFrame}
 import graft.geometry.Geometry
 import graft.pipeline.FramePipeline
 
@@ -28,18 +27,13 @@ object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val nFrames = if (args.length > 0) args(0).toInt else 2
     val size = if (args.length > 1) args(1).toInt else 2880
-    val spark = SparkSession.builder().master("local[32]")
-      .appName("graft-scale-smoke")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = Session.builder("graft-scale-smoke", logLevel = "ERROR")
       // the sandbox host's GC pauses reach many minutes under throttled
       // memory bandwidth (SCALE_r05/r06); stock timeouts kill the in-JVM
       // executor mid-measurement ("unable to send heartbeats 60 times")
       .config("spark.executor.heartbeatInterval", "60s")
       .config("spark.network.timeout", "1200s")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
 
     // per-stage GC time rides along so every log self-adjudicates host
     // health (this box throttles its memory bus for minutes at a time —

@@ -7,8 +7,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
 /** Bridge between graft's custom Catalyst expressions and the public
   * `Column` API. Spark 4 hides the Column↔Expression conversion behind
   * `private[sql] ExpressionUtils` (columnNodeSupport.scala); this object
-  * lives under `org.apache.spark.sql` solely to re-export those two
-  * functions to graft code. No other internals are touched.
+  * lives under `org.apache.spark.sql` to re-export those two functions
+  * to graft code, plus the few package-private calls below.
   */
 object Internals {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -26,4 +26,10 @@ object Internals {
       : org.apache.spark.sql.DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
+
+  /** Block until every queued listener event has been delivered
+    * (`listenerBus` is private[spark]): a listener's counts for an action
+    * that has returned are complete only after this. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

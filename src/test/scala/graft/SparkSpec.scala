@@ -5,20 +5,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session). */
 object TestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+  lazy val spark: SparkSession =
+    graft.core.Session.builder("graft-test", cpus = 8, logLevel = "ERROR")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
 }
 
 abstract class SparkSpec extends AnyFunSuite {

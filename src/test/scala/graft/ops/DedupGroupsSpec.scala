@@ -107,6 +107,26 @@ class DedupGroupsSpec extends SparkSpec {
     assert(leaked.isEmpty, s"persistent RDDs left behind: $leaked")
   }
 
+  test("DataFrame loop (rddLoopMaxEdges=0) == RDD fast path, row for " +
+      "row: a long chain, a star, a self-loop and a null id") {
+    val chain = (0L until 40L).map(i => (Option(100L + i), Option(101L + i)))
+    val pairs = (chain ++ Seq((Some(7L), Some(3L)), (Some(7L), Some(5L)),
+        (Some(9L), Some(9L)), (None, Some(11L)), (Some(3L), None)))
+      .toDF("a", "b")
+    def labels() = Dedup.connectedGroups(pairs, "a", "b").collect()
+      .map(r => (Option(r.get(0)), Option(r.get(1)))).sortBy(_.toString)
+      .toSeq
+    val rdd = labels()
+    spark.conf.set("spark.graft.cc.rddLoopMaxEdges", "0")
+    val loop = try labels()
+      finally spark.conf.unset("spark.graft.cc.rddLoopMaxEdges")
+    assert(loop == rdd)
+    val byId = rdd.toMap
+    assert(byId(Some(140L)) == Some(100L) && byId(Some(5L)) == Some(3L) &&
+      byId(Some(9L)) == Some(9L) && byId(Some(11L)) == Some(11L))
+    assert(byId.get(None).contains(None))
+  }
+
   test("winnowFingerprints matches a brute-force scalar winnow") {
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog again and again"),

@@ -12,7 +12,7 @@ import graft.SparkSpec
   * direction onto e1 before the PQ split must measurably lift ADC
   * recall against the SAME exact-L2 ground truth (legitimate to share:
   * the rotation is an isometry, OpqSpec). The whole computation is
-  * seeded and decimal-deterministic (DeterminismSweep-grade machinery
+  * seeded and decimal-deterministic (DeterminismSpec-grade machinery
   * end to end), so the measured values (plain 0.313, rotated 0.375 at
   * this seed) are exact constants of the code — the floors sit under
   * them and fail only on a real change (a broken rotation, a codebook

@@ -107,6 +107,46 @@ class PercentileSelectSpec extends SparkSpec {
     assert(java.lang.Double.compare(s, e) == 0)
   }
 
+  test("global percentileSelect plans no Window without a partition key " +
+      "(WindowExec's 'No Partition Defined' single-partition move)") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // both ranks of p = 0.9123 hold the tied value 912, i.e. one
+    // bucket, so the routed path runs both of its windows: the
+    // cumulative histogram and the in-bucket value ranking
+    // (a range, not a local Seq: a LocalRelation input would carry the
+    // key as a data column, whatever expression computed it)
+    val df = spark.range(1, 100001).select(
+      (col("id") % 1000).cast("double").as("v"))
+    val e = df.agg(PercentileAgg.percentileExact(col("v"), 0.9123))
+      .collect()(0).getDouble(0)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, ex: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val s = try routed(PercentileAgg.percentileSelect(df, Nil, "v", 0.9123)
+        .collect()(0).getDouble(0))
+      finally {
+        org.apache.spark.sql.graftshim.Internals
+          .drainListeners(spark.sparkContext)
+        spark.listenerManager.unregister(listener)
+      }
+    assert(java.lang.Double.compare(s, e) == 0)
+    object Plans extends AdaptiveSparkPlanHelper
+    import scala.jdk.CollectionConverters._
+    val windows = plans.asScala.toSeq.flatMap(p =>
+      Plans.collect(p) { case w: WindowExec => w })
+    assert(windows.size >= 2, s"routed path ran ${windows.size} windows")
+    assert(windows.forall(_.partitionSpec.nonEmpty),
+      "a window with no partition key: " +
+        windows.filter(_.partitionSpec.isEmpty).mkString("; "))
+  }
+
   // ---- multi-quantile form: must be bit-identical to N single calls ----
 
   private def checkMulti(values: Seq[(String, Double)], ps: Seq[Double],
