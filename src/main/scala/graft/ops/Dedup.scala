@@ -169,10 +169,9 @@ object Dedup {
 
   /** LSH band self-join over a signatures table (id, sig): candidate
     * pairs with their signature-agreement COUNT. Shared by the batch
-    * candidate query and the streaming admission filter — the "dedupe
-    * bare id pairs FIRST, then score each pair once" discipline (keeping
-    * the signature arrays out of the distinct shuffle) lives here, in
-    * one place. */
+    * candidate queries — the "dedupe bare id pairs FIRST, then score
+    * each pair once" discipline (keeping the signature arrays out of the
+    * distinct shuffle) lives here, in one place. */
   def candidatePairsFromSigs(sigs: DataFrame, k: Int,
                              bands: Int): DataFrame = {
     val rowsPerBand = k / bands

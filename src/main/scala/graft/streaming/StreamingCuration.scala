@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
-import graft.core.Pins
+import graft.core.{Overlap, Pins}
 import graft.ops.TextMetrics
 
 /** The STREAMING curation pipeline as ONE foreachBatch composition — the
@@ -21,6 +21,11 @@ import graft.ops.TextMetrics
   *       walk over a parquet-carried per-stratum total)
   *     → per-column PROFILE increments over the admitted output
   *       (the drop monitor).
+  *
+  * The stages are a dependency order, not a chain of actions: a batch
+  * reads its source once, over every core, and the writes that read
+  * nothing of each other run concurrently (the graph in
+  * [[processBatch]]).
   *
   * Every stage's state is bounded or external-and-idempotent:
   *  - the parse and the rule evaluation are row-local projections (no
@@ -90,32 +95,58 @@ object StreamingCuration {
     * spec and a backfill driver can run it directly). `lines` carries
     * raw JSONL in its first column; `schema` is the ingest contract
     * and must contain `idCol` (long) and `textCol` (string). The batch
-    * is one [[Pins.scope]]: every stage's output is written (the
-    * profile increment last) before its pins are released. */
+    * is one [[Pins.scope]]: every stage's output is written before its
+    * pins are released.
+    *
+    * The batch runs as a short dependency graph, not a chain of
+    * actions. Its lines are read once and pinned over
+    * `defaultParallelism` partitions (a batch is often one file, so one
+    * partition); every later stage reads that pin. Writes that read
+    * nothing of each other then run concurrently ([[Overlap.par]]):
+    * {{{
+    *   lines pin ─┬─ quarantine write
+    *              └─ featured pin ─┬─ funnel write
+    *                               └─ [NB] → dedup judge ─┬─ store write
+    *                                                      ├─ admitted write
+    *                                                      └─ [budget] → profile write
+    * }}}
+    * The optional NB and budget stages keep their place in the chain.
+    * A failing branch is rethrown after every other branch finishes. */
   def processBatch(spark: SparkSession, lines: DataFrame, batchId: Long,
                    schema: StructType, idCol: String, textCol: String,
                    outDir: String, cfg: Config = Config()): Unit = Pins.scope {
-    // stage 1: contract parse; quarantined raw lines persist for replay
+    // stage 1: contract parse over the batch's lines, read from the
+    // source once; quarantined raw lines persist for replay
+    val src = Pins.pin(lines.repartition(spark.sparkContext.defaultParallelism))
     val (clean, quarantined) =
-      graft.sources.JsonlSource.parseWithQuarantine(lines, schema)
-    quarantined.write.mode("overwrite")
-      .parquet(s"$outDir/quarantine/batch=$batchId")
+      graft.sources.JsonlSource.parseWithQuarantine(src, schema)
+    Overlap.par(
+      () => quarantined.write.mode("overwrite")
+        .parquet(s"$outDir/quarantine/batch=$batchId"),
+      () => {
+        // stage 2: rule features bound once; counters + admission share
+        // the SAME rule columns (single-sourced — the funnel cannot
+        // disagree with the filter). Pinned: the counter aggregation and
+        // the admission filter both consume it.
+        val featured = Pins.pin(StreamingFunnel.withFeatures(clean,
+          col(textCol), cfg.minWords, cfg.maxWords, cfg.stopwords))
+        Overlap.par(
+          () => StreamingFunnel.failCounters(featured, cfg.minWords,
+              cfg.maxWords, cfg.ngramMax)
+            .coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/funnel/batch=$batchId"),
+          () => admit(spark, featured, batchId, idCol, textCol, outDir, cfg))
+      })
+  }
 
-    // stage 2: rule features bound once; counters + admission share the
-    // SAME rule columns (single-sourced — the funnel cannot disagree
-    // with the filter). The featured batch is pinned: the counter
-    // aggregation and the admission filter both consume it, and the
-    // parse lineage re-executing per consumer would re-read the stream
-    // source's batch twice per stage.
-    val featured = Pins.pin(StreamingFunnel.withFeatures(clean,
-      col(textCol), cfg.minWords, cfg.maxWords, cfg.stopwords))
+  /** Stages 2.5 to 4 over the featured batch: the learned filter (when
+    * configured), the near-dup judge, then the judge's two writes
+    * alongside the budget stage (when configured) and the profile. */
+  private def admit(spark: SparkSession, featured: DataFrame, batchId: Long,
+                    idCol: String, textCol: String, outDir: String,
+                    cfg: Config): Unit = {
     val rules = StreamingFunnel.rulesOver(col("__qf_g"), col("__qf_r"),
       cfg.minWords, cfg.maxWords, cfg.ngramMax)
-    StreamingFunnel.failCounters(featured, cfg.minWords, cfg.maxWords,
-        cfg.ngramMax)
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$outDir/funnel/batch=$batchId")
-
     // stage 2.5 (when configured): the learned quality filter over the
     // rule survivors — NB argmax == keep class admits; per-class counts
     // persist so the cut is observable. Stateless: pure scoring
@@ -137,33 +168,34 @@ object StreamingCuration {
     }
     // stage 3: online near-dup admission against the persistent LSH
     // store
-    val admittedIds = StreamingDedup.processBatch(spark, admittedQ,
-      batchId, idCol, textCol, s"$outDir/store", s"$outDir/admitted",
-      cfg.shingleN, cfg.sigK, cfg.bands, cfg.minAgree)
+    val verdict = StreamingDedup.judge(spark, admittedQ, batchId, idCol,
+      textCol, s"$outDir/store", s"$outDir/admitted", cfg.shingleN,
+      cfg.sigK, cfg.bands, cfg.minAgree)
 
     // stage 4: profile increment over THIS batch's admitted output (the
     // drop monitor watches what survived, not what arrived). The
     // admitted rows come from the pinned featured table semi-joined
     // against the BOUNDED admitted-id list (one batch's worth — the
-    // processBatch contract), not from re-reading the just-written
-    // parquet: an all-rejected batch would leave a fileless directory
-    // that a read-back cannot infer a schema from.
-    import spark.implicits._
-    val admDf = admittedQ.join(
-      broadcast(admittedIds.toDF("__adm_id")),
-      admittedQ(idCol).cast("long") === col("__adm_id"), "left_semi")
-
-    // stage 3.5 (when configured): token-budget admission over the
-    // near-dup survivors — the production shape is a budget-CAPPED
-    // curation, and the profile must watch what survives the WHOLE
-    // funnel, so the budget cut runs before the profile increment
-    val surviving =
-      if (cfg.budgets.isEmpty) admDf
-      else budgetStage(spark, admDf, batchId, idCol, textCol, outDir, cfg)
-
-    profileIncrement(surviving, cfg.hllP)
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$outDir/profile/batch=$batchId")
+    // judge's contract), not from re-reading the just-written parquet:
+    // an all-rejected batch would leave a fileless directory that a
+    // read-back cannot infer a schema from.
+    def profile(): Unit = {
+      import spark.implicits._
+      val admDf = admittedQ.join(
+        broadcast(verdict.ids.toDF("__adm_id")),
+        admittedQ(idCol).cast("long") === col("__adm_id"), "left_semi")
+      // stage 3.5 (when configured): token-budget admission over the
+      // near-dup survivors — the production shape is a budget-CAPPED
+      // curation, and the profile must watch what survives the WHOLE
+      // funnel, so the budget cut runs before the profile increment
+      val surviving =
+        if (cfg.budgets.isEmpty) admDf
+        else budgetStage(spark, admDf, batchId, idCol, textCol, outDir, cfg)
+      profileIncrement(surviving, cfg.hllP)
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/profile/batch=$batchId")
+    }
+    Overlap.par(verdict.writes :+ (() => profile()): _*)
   }
 
   /** The token-budget admission stage: [[StreamingBudget.walk]] (the

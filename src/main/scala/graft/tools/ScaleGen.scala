@@ -152,7 +152,7 @@ object ScaleGen {
   }
 
   def main(args: Array[String]): Unit = {
-    val outBase = if (args.length > 0) args(0) else "/root/repo/tmp/scalegen"
+    val outBase = if (args.length > 0) args(0) else "tmp/scalegen"
     val spark = graft.core.Session.builder("graft-scalegen", logLevel = "ERROR")
       .getOrCreate()
     // g01 mirrors sf0.1's row counts; g1 is exactly 10x every table

@@ -299,13 +299,16 @@ class WarcSourceSpec extends SparkSpec {
       .collect()(0).getLong(0)
     assert(admitted.collect()(0).getLong(0) == expectedId)
     // WARC-level corruption rides the funnel's OWN stage-1 quarantine:
-    // 3 corrupt regions, raw bytes recoverable from the marker lines
+    // 3 corrupt regions, raw bytes recoverable from the marker lines.
+    // Spark's base64 breaks its output into CRLF-separated lines, so the
+    // marker decodes with the MIME decoder, in whatever order the rows
+    // come back
     val quar = spark.read.parquet(s"$out/quarantine").collect()
       .map(_.getString(0))
     assert(quar.length == 3 &&
       quar.forall(_.startsWith("WARC-QUARANTINE\t")))
     assert(quar.exists(l => new String(
-      java.util.Base64.getDecoder.decode(l.split("\t")(3)), "ISO-8859-1")
+      java.util.Base64.getMimeDecoder.decode(l.split("\t")(3)), "ISO-8859-1")
       .startsWith("this is not a warc record")))
     // the funnel countered every parsed document (2 responses per
     // drop = 4 docs; the two spam instances fail the rule conjunction,

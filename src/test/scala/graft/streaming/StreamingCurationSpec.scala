@@ -157,6 +157,105 @@ class StreamingCurationSpec extends SparkSpec {
       merged("doc_id")._3.contains(20.0), s"${merged("doc_id")}")
   }
 
+  /** Spark jobs measured per micro-batch of the job-budget test. The
+    * first batch finds no store to probe. The chain of one action after
+    * another, reading the source twice, ran 21 and 26. */
+  private val MeasuredJobs = Map(0 -> 19, 1 -> 21)
+
+  /** Slack, in jobs, on each batch and on the two-batch total. A read
+    * re-added to the batch costs at least one job in EACH batch, so it
+    * overruns the total. */
+  private val JobSlack = 1
+
+  test("job budget: each curation micro-batch runs its measured Spark " +
+      "jobs plus a one-job slack, and reads its source once") {
+    // A deterministic counter, not a wall time: every driver read,
+    // source scan or pin added to the batch shows up here as jobs. The
+    // count is per (query id, batch id) — the local properties every job
+    // of a micro-batch carries, including jobs submitted from the
+    // batch's own driver threads.
+    val dir = java.nio.file.Files.createTempDirectory("curjb_in").toString
+    val out = java.nio.file.Files.createTempDirectory("curjb_out").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("curjb_ck").toString
+    def batchLines(b: Int): Seq[String] =
+      (0 until 12).map(i => jline(100L * b + i, "en", prose(s"j$b$i"))) ++
+        Seq(jline(100L * b + 50, "en", prose(s"j${b}0")
+          .replace(s"j${b}0kword10", "mutatedjb")), // near-dup
+          jline(100L * b + 51, "en", "too few words"),
+          """{"doc_id": 1, "lang": "en", "text": "trunc""")
+    val jobs = new java.util.concurrent.ConcurrentHashMap[(String, String), Int]()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          if (p.getProperty("graft.jobBudget.marker") != null) marker.countDown()
+          val q = p.getProperty("sql.streaming.queryId")
+          val b = p.getProperty("streaming.sql.batchId")
+          if (q != null && b != null) jobs.merge((q, b), 1, _ + _)
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "b0.jsonl"),
+        batchLines(0).mkString("\n"))
+      val q = StreamingCuration.start(spark, spark.readStream
+          .schema(StructType(Seq(StructField("value", StringType))))
+          .text(dir), schema, "doc_id", "text", out, ckpt)
+      val inputs = try {
+        q.processAllAvailable()
+        java.nio.file.Files.writeString(
+          java.nio.file.Paths.get(dir, "b1.jsonl"),
+          batchLines(1).mkString("\n"))
+        q.processAllAvailable()
+        q.recentProgress.filter(_.numInputRows > 0)
+          .map(p => p.batchId.toInt -> p.numInputRows).toMap
+      } finally q.stop()
+      // listener events arrive in order: once this marker job is seen,
+      // every stream job has been counted
+      spark.sparkContext.setLocalProperty("graft.jobBudget.marker", "1")
+      try spark.sparkContext.parallelize(1 to 1, 1).count()
+      finally spark.sparkContext.setLocalProperty("graft.jobBudget.marker", null)
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      import scala.jdk.CollectionConverters._
+      val perBatch = jobs.asScala.collect {
+        case ((qid, b), n) if qid == q.id.toString => b.toInt -> n }.toMap
+      assert(perBatch.keySet == Set(0, 1), s"batches: $perBatch")
+      info(s"jobs per micro-batch: $perBatch")
+      perBatch.foreach { case (b, n) =>
+        assert(n <= MeasuredJobs(b) + JobSlack,
+          s"batch $b ran $n jobs, measured ${MeasuredJobs(b)}: $perBatch") }
+      assert(perBatch.values.sum <= MeasuredJobs.values.sum + JobSlack,
+        s"the two batches ran ${perBatch.values.sum} jobs, measured " +
+          s"${MeasuredJobs.values.sum}: $perBatch")
+      // the source's rows are counted once per read of the source
+      assert(inputs == Map(0 -> 15L, 1 -> 15L), s"input rows: $inputs")
+      // the batch's work all happened: nothing was skipped to save jobs
+      assert(spark.read.parquet(s"$out/admitted").count() == 24L)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a failing branch is rethrown after every other branch of the " +
+      "batch finishes, and the batch leaves no pin behind") {
+    val out = java.nio.file.Files.createTempDirectory("curf_out").toString
+    // the quarantine write's parent is a file: that branch fails at once
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(out,
+      "quarantine"), "not a directory")
+    val lines = Seq(jline(10, "en", prose("fa")), jline(11, "en", prose("fb")),
+      "broken json").toDF("raw")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[Exception](StreamingCuration.processBatch(spark, lines,
+      0L, schema, "doc_id", "text", out))
+    // every other branch ran to its end before the failure surfaced
+    val hc = graft.core.Fs.conf(spark)
+    for (d <- Seq("funnel", "store", "admitted", "profile"))
+      assert(graft.core.Fs.hasParquetData(s"$out/$d/batch=0", hc),
+        s"$d was not written before the failure ($e)")
+    assert(spark.read.parquet(s"$out/admitted").count() == 2L)
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"the failed batch leaked pins: $leaked")
+  }
+
   test("a replayed micro-batch rewrites its increments instead of " +
       "double-counting (funnel, quarantine, admitted, profile)") {
     val out = java.nio.file.Files.createTempDirectory("curr_out").toString
