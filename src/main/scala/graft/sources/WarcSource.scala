@@ -670,9 +670,12 @@ object WarcSource {
       headerVal("warc-date").as("warc_date"),
       bodyText(headerVal("content-type"), col("payload"),
         extract = true).as("text")))
+    // Spark's base64 breaks its output with a CRLF every 76 characters;
+    // the marker is ONE line, so the breaks come out
     val marker = concat(lit("WARC-QUARANTINE\t"), col("file"), lit("\t"),
-      col("offset").cast("string"), lit("\t"), base64(col("raw")),
-      lit("\t"), col("err"))
+      col("offset").cast("string"), lit("\t"),
+      regexp_replace(base64(col("raw")), "\r\n", ""), lit("\t"),
+      col("err"))
     recs
       .where(col("corrupt") || lower(headerVal("warc-type")) === "response")
       .select(when(col("corrupt"), marker).otherwise(docJson).as("value"))

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -100,8 +99,8 @@ object StreamingDedup {
                                minAgree: Int = 16): Verdict = {
     // pinned: the judge reads it twice (members, the store probe's
     // keys) and the store increment once more
-    lazy val bandRows = Pins.pin(Dedup.minhashSignatures(batch, idCol,
-        textCol, n, k)
+    val bandRows = Pins.pin(Dedup.minhashSignatures(batch, idCol, textCol,
+        n, k)
       .select(col("id"), col("sig"), explode(
         Dedup.lshBandKeys(col("sig"), bands, k / bands)).as("bk"))
       .select(col("id"), col("bk.band").as("band"),
@@ -110,12 +109,9 @@ object StreamingDedup {
     // admitted nothing (or only signature-less short docs) leaves a
     // fileless batch=<id> directory, and a directory-name check alone
     // would send every later batch into an UNABLE_TO_INFER_SCHEMA crash
-    lazy val store =
+    val store =
       if (!Fs.hasParquetData(storeDir, Fs.conf(spark))) None
       else Some(spark.read.parquet(storeDir))
-    // the store's listing and schema read are driver work: they run
-    // while the band rows pin
-    Overlap.par(() => bandRows, () => store)
 
     val batchMembers = bandRows.withColumn("stored", lit(false))
     val members = store.fold(batchMembers)(s => batchMembers.unionByName(s
@@ -130,16 +126,12 @@ object StreamingDedup {
       .select(col("id"), col("band"), col("key"), col("sig"),
         lit(true).as("stored"))))
 
-    // most buckets hold one batch document and nothing else: a window
-    // over the exchange's own partitioning counts each bucket, and only
-    // the crowded ones are gathered
+    // a bucket with one member judges nothing
     val rejected = members
-      .withColumn("n", count(lit(1)).over(
-        Window.partitionBy(col("band"), col("key"))))
-      .where(col("n") > 1)
       .groupBy(col("band"), col("key"))
       .agg(collect_list(struct(col("id"), col("sig"), col("stored")))
         .as("m"))
+      .where(size(col("m")) > 1)
       .select(explode(col("m")).as("d"), col("m"))
       .where(!col("d.stored") && exists(col("m"), x =>
         (x("stored") || x("id") < col("d.id")) &&

@@ -179,6 +179,24 @@ class WarcSourceSpec extends SparkSpec {
       s"id-less records must get DISTINCT ids, got ${ids.toSeq}")
   }
 
+  test("documentLines: a corrupt region longer than one Base64 line " +
+      "renders as ONE marker line that the basic decoder reads") {
+    val garbage = "this is not a warc record " * 10
+    val rec = "WARC/1.0\r\nWARC-Type: response\r\n" +
+      "Content-Type: text/plain\r\nContent-Length: 2\r\n\r\nhi\r\n\r\n"
+    val tmp = java.nio.file.Files.createTempDirectory("warc_longcorrupt")
+    java.nio.file.Files.write(tmp.resolve("x.warc"),
+      (garbage + "\r\n" + rec).getBytes("ISO-8859-1"))
+    val quar = WarcSource.documentLines(WarcSource.parseBinary(
+        spark.read.format("binaryFile").load(tmp.toString)))
+      .collect().map(_.getString(0))
+      .filter(_.startsWith("WARC-QUARANTINE\t"))
+    assert(quar.length == 1 && !quar(0).exists(c => c == '\r' || c == '\n'),
+      quar.toSeq)
+    assert(new String(java.util.Base64.getDecoder.decode(
+      quar(0).split("\t")(3)), "ISO-8859-1").startsWith(garbage))
+  }
+
   test("path transport (parsePaths): record-identical to readRaw over " +
       "the same files — clean, corrupt and gzip — and the file scan " +
       "reads ONLY the path (segment bytes never enter a row)") {
@@ -299,16 +317,13 @@ class WarcSourceSpec extends SparkSpec {
       .collect()(0).getLong(0)
     assert(admitted.collect()(0).getLong(0) == expectedId)
     // WARC-level corruption rides the funnel's OWN stage-1 quarantine:
-    // 3 corrupt regions, raw bytes recoverable from the marker lines.
-    // Spark's base64 breaks its output into CRLF-separated lines, so the
-    // marker decodes with the MIME decoder, in whatever order the rows
-    // come back
+    // 3 corrupt regions, raw bytes recoverable from the marker lines
     val quar = spark.read.parquet(s"$out/quarantine").collect()
       .map(_.getString(0))
     assert(quar.length == 3 &&
       quar.forall(_.startsWith("WARC-QUARANTINE\t")))
     assert(quar.exists(l => new String(
-      java.util.Base64.getMimeDecoder.decode(l.split("\t")(3)), "ISO-8859-1")
+      java.util.Base64.getDecoder.decode(l.split("\t")(3)), "ISO-8859-1")
       .startsWith("this is not a warc record")))
     // the funnel countered every parsed document (2 responses per
     // drop = 4 docs; the two spam instances fail the rule conjunction,

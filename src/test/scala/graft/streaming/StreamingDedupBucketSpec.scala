@@ -65,7 +65,13 @@ private object PairJoinJudge {
   * signature-less short documents, repeated ids, a hot bucket, and
   * agreement exactly at and one below `minAgree`. Each batch is judged by
   * both forms against the same store, then committed with
-  * [[StreamingDedup.processBatch]] so the next batch sees it. */
+  * [[StreamingDedup.processBatch]] so the next batch sees it.
+  *
+  * One case differs on purpose and is pinned as such: an id that
+  * arrives with two texts is judged text by text, so a text is checked
+  * only against the documents it shares a bucket with. The pair-join
+  * form re-checked every text of an id once any of them had a
+  * candidate. */
 class StreamingDedupBucketSpec extends SparkSpec {
   import spark.implicits._
 
@@ -151,6 +157,37 @@ class StreamingDedupBucketSpec extends SparkSpec {
         (7L, novel("d")), (7L, doc("e", 8)),
         (8L, novel("g")), (9L, novel("g")))))
     assert(out == Seq(Seq(1L, 2L), Seq(5L, 8L)))
+  }
+
+  test("a repeated id is judged text by text: its second text near-dups " +
+      "a store document it shares no bucket with, and is admitted") {
+    val t1 = doc("a"); val t2 = novel("d")
+    val Array(s1, s2) = Dedup.minhashSignatures(
+        Seq((1L, t1), (2L, t2)).toDF("id", "t"), "id", "t")
+      .orderBy("id").collect().map(_.getSeq[Long](1).toArray)
+    // store document S: band 0 is t1's (one shared bucket); bands 1-7
+    // are t2's with the first position of each changed, so S agrees with
+    // t2 on most positions yet shares none of its band keys
+    val ss = s2.clone()
+    (0 until 4).foreach(i => ss(i) = s1(i))
+    (1 until 8).foreach(b => ss(b * 4) = s2(b * 4) + 1)
+    def agree(a: Array[Long]) = a.zip(ss).count { case (x, y) => x == y }
+    def sharesBand(a: Array[Long]) = a.grouped(4).zip(ss.grouped(4))
+      .exists { case (x, y) => x.sameElements(y) }
+    assert(sharesBand(s1) && agree(s1) < 16 && !sharesBand(s2) &&
+      agree(s2) >= 16, s"t1 ${agree(s1)}, t2 ${agree(s2)}")
+    val store = tmp("bucket_store"); val adm = tmp("bucket_adm")
+    Seq((100L, ss.toSeq)).toDF("id", "sig")
+      .select(col("id"), col("sig"),
+        explode(Dedup.lshBandKeys(col("sig"), 8, 4)).as("bk"))
+      .select(col("id"), col("bk.band").as("band"), col("bk.key").as("key"),
+        col("sig"))
+      .write.partitionBy("band").parquet(s"$store/batch=0")
+    val b = Seq((7L, t1), (7L, t2), (8L, novel("e"))).toDF("doc_id", "text")
+    assert(PairJoinJudge.admitted(spark, b, 1L, "doc_id", "text", store) ==
+      Seq(8L))
+    assert(StreamingDedup.processBatch(spark, b, 1L, "doc_id", "text",
+      store, adm) == Seq(7L, 8L))
   }
 
   test("a hot bucket of many colliding documents, across the store " +
